@@ -25,9 +25,11 @@ import org.apache.spark.sql.functions._
   * so the same code behaves identically under the driver's sessions.
   *
   * Scale: pure narrow per-row expressions — no shuffle, no UDF; at
-  * 100 TB the split costs one scan. Callers that consume BOTH outputs
-  * should persist the error-annotated frame or write it once and
-  * re-read, to avoid recomputing the scan twice.
+  * 100 TB the split costs one scan per consumed output. A caller that
+  * writes BOTH outputs pins the annotated frame once and derives both
+  * from it: `Normalize.pipeline` pins [[tagByGroup]]'s frame and takes
+  * its ok rows with [[okGroups]] and its dead verdicts with one
+  * aggregate over the same pin.
   */
 object Enforce {
 
@@ -110,20 +112,32 @@ object Enforce {
     (ok, dead)
   }
 
-  /** Group-level split matching the reference's semantics exactly: any
-    * error in a group dead-letters the WHOLE group (ref
-    * `transforms.py:149-184` — one failed record fails its pk group).
-    * Scale: the group verdict is a window max over the group key — one
-    * extra shuffle by `groupKey`, no driver involvement.
-    */
-  def splitByGroup(df: DataFrame, schema: Seq[FieldSpec], groupKey: String): (DataFrame, DataFrame) = {
-    val annotated = withError(df, schema)
+  /** Input row + `error` + `group_error`: the max `error` over the
+    * row's `groupKey` group, null exactly when every row of the group
+    * is clean (ref `transforms.py:149-184` — one failed record fails
+    * its pk group). Scale: the group verdict is a window max over the
+    * group key — one shuffle by `groupKey`, no driver involvement. The
+    * one definition of group tagging: [[splitByGroup]] and
+    * `Normalize.pipeline` both build on it. */
+  def tagByGroup(df: DataFrame, schema: Seq[FieldSpec], groupKey: String): DataFrame = {
     val w = org.apache.spark.sql.expressions.Window.partitionBy(col(groupKey))
-    val tagged = annotated.withColumn("group_error", max(col("error")).over(w))
-    val ok = tagged.filter(col("group_error").isNull)
-      .select(schema.map(f => fieldValue(df, f)): _*)
+    withError(df, schema).withColumn("group_error", max(col("error")).over(w))
+  }
+
+  /** The enforced schema projection of a [[tagByGroup]] frame's clean
+    * groups. */
+  def okGroups(tagged: DataFrame, schema: Seq[FieldSpec]): DataFrame =
+    tagged.filter(col("group_error").isNull)
+      .select(schema.map(f => fieldValue(tagged, f)): _*)
+
+  /** Group-level split matching the reference's semantics exactly: any
+    * error in a group dead-letters the WHOLE group (ok = enforced
+    * projection of the clean groups, dead = every row of a failed group
+    * + its row `error`). */
+  def splitByGroup(df: DataFrame, schema: Seq[FieldSpec], groupKey: String): (DataFrame, DataFrame) = {
+    val tagged = tagByGroup(df, schema, groupKey)
     val dead = tagged.filter(col("group_error").isNotNull).drop("group_error")
-    (ok, dead)
+    (okGroups(tagged, schema), dead)
   }
 
   /** Dead-letter sink shape (ref `transforms.py:184` + `pipeline.py:

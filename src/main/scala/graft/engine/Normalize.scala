@@ -231,19 +231,30 @@ object Normalize {
     * enforce the unified schema, split dead letters at the
     * (season, league) GROUP granularity exactly like the reference
     * (ref `transforms.py:149-184`: any failure inside a group diverts
-    * the whole group):
+    * the whole group). Each staged group gets one verdict, in this
+    * order of precedence:
     *  - unparseable staged document → its group dead-letters
     *    (`error=corrupt_input`, ref `transforms.py:167-169`);
-    *  - any enforcement failure → the row's whole group dead-letters;
     *  - a group present in the inputs that produces NO unified rows
     *    (empty payload / nothing joinable) → dead-letters
     *    (`error=empty_or_unjoinable_group`, ref `transforms.py:26-27,
-    *    78-87` P10 presence checks).
+    *    78-87` P10 presence checks);
+    *  - any enforcement failure → the row's whole group dead-letters
+    *    (`error=enforcement_failure`).
     *
-    * Returns (ok, dead): `dead` has one (pk, error) row per failed
-    * group, feedable to `Sinks.writeDeadLetter`. Scale: the group
-    * verdicts are distinct-sets of group keys (tiny), combined with
-    * semi/anti joins — no driver collection. */
+    * Returns (ok, dead): `dead` has one (pk, error, files) row per
+    * failed group, feedable to `Sinks.writeDeadLetter`.
+    *
+    * One pass, like the reference's tagged multi-output ParDo: the
+    * corrupt-group set and the group-tagged enforced frame
+    * ([[Enforce.tagByGroup]]) are pinned through `graft.Caches`, `ok`
+    * is a filter of the tagged pin, and `dead` is ONE verdict join of
+    * the per-group file list with the corrupt flag and the tagged
+    * pin's per-group error — so writing `ok` then `dead` normalizes,
+    * probes and enforces each staged file once, not once per output.
+    * Both frames are valid until `Caches.releaseAll`. Scale: the
+    * verdict inputs are per-group rows (tiny), joined distributed — no
+    * driver collection. */
   def pipeline(spark: SparkSession, root: String, apiName: String): (DataFrame, DataFrame) = {
     import org.apache.spark.sql.DataFrame
     import org.apache.spark.sql.types.{StringType, StructField, StructType}
@@ -265,21 +276,19 @@ object Normalize {
         .filter(col("src_path") === col("_last")).drop("_last")
     }
 
-    // pinned via graft.Caches (multiple consumers each: normalize +
-    // group audits) so the library-wide releaseAll() contract reaches
-    // these blocks — a bare .cache() would outlive the query.
-    // `_corrupt_record` must be dropped BEFORE caching: materializing a
-    // cache selects every column, and for a fully-corrupt file that is
-    // only the corrupt-record column, which Spark refuses to query off
-    // a JSON scan (QUERY_ONLY_CORRUPT_RECORD_COLUMN). Whole-file
-    // corruption is detected by the text parse probe below instead.
+    // not pinned: the normalizer is their only consumer, and its
+    // output is pinned below as the tagged frame. `_corrupt_record` is
+    // dropped: for a fully-corrupt file it is the only column, which
+    // Spark refuses to query off a JSON scan
+    // (QUERY_ONLY_CORRUPT_RECORD_COLUMN). Whole-file corruption is
+    // detected by the text parse probe below instead.
     // A glob matching NO files must behave as an empty input, not a
     // PATH_NOT_FOUND job failure.
     def staged(glob: String): DataFrame =
       try {
         val df = readStaged(spark, glob)
-        graft.Caches.pin(latestOnly(
-          if (df.columns.contains("_corrupt_record")) df.drop("_corrupt_record") else df))
+        latestOnly(
+          if (df.columns.contains("_corrupt_record")) df.drop("_corrupt_record") else df)
       } catch {
         case _: org.apache.spark.sql.AnalysisException => emptyPks("src_path", "pk")
       }
@@ -297,8 +306,8 @@ object Normalize {
         .filter(get_json_object(col("value"), "$").isNull)
         .select(col("pk")).distinct()
       catch { case _: org.apache.spark.sql.AnalysisException => emptyPks("pk") }
-    val corrupt = corruptPks(s"$root/*/*/teams/*.json")
-      .unionByName(corruptPks(s"$root/*/*/standings/*.json")).distinct()
+    val corrupt = graft.Caches.pin(corruptPks(s"$root/*/*/teams/*.json")
+      .unionByName(corruptPks(s"$root/*/*/standings/*.json")).distinct())
 
     // every group the staged FILES mention — derived from the file
     // listing, not from parsed rows: a file whose payload parses to
@@ -310,12 +319,11 @@ object Normalize {
         .select(Paths.extractPk(col("path")).as("pk"), col("path"))
       catch { case _: org.apache.spark.sql.AnalysisException =>
         emptyPks("pk", "path") }
-    val files = graft.Caches.pin(fileList(s"$root/*/*/teams/*.json")
-      .unionByName(fileList(s"$root/*/*/standings/*.json")))
-    val expected = files.select(col("pk")).distinct()
     // per-group staged-file provenance for the dead-letter records
     // (ref transforms.py:184 carries the group's file list)
-    val filesPerGroup = files.groupBy(col("pk"))
+    val filesPerGroup = fileList(s"$root/*/*/teams/*.json")
+      .unionByName(fileList(s"$root/*/*/standings/*.json"))
+      .groupBy(col("pk"))
       .agg(sort_array(collect_list(col("path"))).as("files"))
 
     // normalizers carry the TRUE group key through as _group_pk
@@ -325,19 +333,25 @@ object Normalize {
     val clean = unified.join(
       corrupt.select(col("pk").as("_bad")),
       col("_group_pk") === col("_bad"), "left_anti")
-    val (ok, deadRows) = Enforce.splitByGroup(clean, SchemaRegistry.v1.fields, "_group_pk")
+    val tagged = graft.Caches.pin(
+      Enforce.tagByGroup(clean, SchemaRegistry.v1.fields, "_group_pk"))
+    val ok = Enforce.okGroups(tagged, SchemaRegistry.v1.fields)
 
-    val enforceDead = deadRows.select(col("_group_pk").as("pk")).distinct()
-      .withColumn("error", lit("enforcement_failure"))
-    val corruptDead = corrupt.withColumn("error", lit("corrupt_input"))
-    val cleanGroups = clean.select(col("_group_pk").as("pk")).distinct()
-    val vanished = expected
-      .join(cleanGroups, Seq("pk"), "left_anti")
-      .join(corruptDead.select("pk"), Seq("pk"), "left_anti")
-      .withColumn("error", lit("empty_or_unjoinable_group"))
-
-    val dead = corruptDead.unionByName(enforceDead).unionByName(vanished)
-      .join(filesPerGroup, Seq("pk"), "left")
+    // one row per group that produced unified rows; `group_error` is
+    // null exactly for the clean ones
+    val produced = tagged.groupBy(col("_group_pk").as("pk"))
+      .agg(max(col("group_error")).as("group_error"))
+      .withColumn("_produced", lit(true))
+    val dead = filesPerGroup
+      .join(corrupt.withColumn("_corrupt", lit(true)), Seq("pk"), "left")
+      .join(produced, Seq("pk"), "left")
+      .select(col("pk"),
+        when(col("_corrupt").isNotNull, lit("corrupt_input"))
+          .when(col("_produced").isNull, lit("empty_or_unjoinable_group"))
+          .when(col("group_error").isNotNull, lit("enforcement_failure"))
+          .as("error"),
+        col("files"))
+      .filter(col("error").isNotNull)
     (ok, dead)
   }
 }

@@ -13,10 +13,15 @@ package graft.engine
   * completion before the first failure is rethrown, so a failure
   * reports the true first cause rather than an interrupted pool.
   *
+  * `xs` is forced to a strict Vector before any task is submitted: a
+  * lazy Seq (a view, a LazyList) would otherwise interleave submit and
+  * get and run the operations one at a time.
+  *
   * Shared by Similarity.compactIvfLayout's per-partition
   * snapshot/swap loop and StagedJsonWrite's commit renames (r21). */
 object ParFs {
-  def apply[A, B](xs: Seq[A])(f: A => B): Seq[B] = {
+  def apply[A, B](xs0: Seq[A])(f: A => B): Seq[B] = {
+    val xs = xs0.toVector
     if (xs.size <= 1) xs.map(f)
     else {
       val pool = java.util.concurrent.Executors.newFixedThreadPool(

@@ -47,25 +47,21 @@ object Sinks {
     * THIS run's data and leaves every other partition in place:
     * re-running a league is idempotent AND other leagues survive.
     * At 100 TB this is also the only affordable write — a run
-    * touches its partitions, never the table. */
-  def writeUnifiedUpsert(df: DataFrame, outDir: String, apiName: String): Unit = {
-    val spark = df.sparkSession
-    val saved = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try {
-      // null league_id rows would all land in one Hive default
-      // partition that successive runs for DIFFERENT leagues would
-      // clobber; routing them to an explicit pseudo-league keeps the
-      // per-league-truncate contract well-defined (the __unknown__
-      // bucket is one "league" whose runs replace each other)
-      df.withColumn("update_timestamp",
-          coalesce(col("update_timestamp"), current_timestamp()))
-        .withColumn("league_id", coalesce(col("league_id"), lit("__unknown__")))
-        .write.mode("overwrite")
-        .partitionBy("season", "league_id")
-        .parquet(s"$outDir/teams_$apiName")
-    } finally spark.conf.set("spark.sql.sources.partitionOverwriteMode", saved)
-  }
+    * touches its partitions, never the table. The overwrite mode is a
+    * per-write option, so the session conf is never touched. */
+  def writeUnifiedUpsert(df: DataFrame, outDir: String, apiName: String): Unit =
+    // null league_id rows would all land in one Hive default
+    // partition that successive runs for DIFFERENT leagues would
+    // clobber; routing them to an explicit pseudo-league keeps the
+    // per-league-truncate contract well-defined (the __unknown__
+    // bucket is one "league" whose runs replace each other)
+    df.withColumn("update_timestamp",
+        coalesce(col("update_timestamp"), current_timestamp()))
+      .withColumn("league_id", coalesce(col("league_id"), lit("__unknown__")))
+      .write.mode("overwrite")
+      .option("partitionOverwriteMode", "dynamic")
+      .partitionBy("season", "league_id")
+      .parquet(s"$outDir/teams_$apiName")
 
   /** Small-files compaction: rewrite a parquet dir to ~`targetFiles`
     * files. Streaming/micro-batched sinks accrete tiny files whose

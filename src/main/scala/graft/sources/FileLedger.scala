@@ -14,10 +14,15 @@ import org.apache.spark.sql.functions._
   *    OTHER runs — a re-run of the same `runId` sees its own prior
   *    commit excluded, so it re-selects exactly the same file set
   *    (replay idempotence, the dedupBatch/lateBatch architecture:
-  *    overwrite your own partition, read excluding yourself);
+  *    overwrite your own partition, read excluding yourself). The
+  *    result is a SNAPSHOT taken when `newFiles` returns (a
+  *    lineage-truncated local checkpoint via `graft.Caches`): a file
+  *    staged after the call is not in it, so it is neither processed
+  *    nor committed by this run and stays new for the next one;
   *  - `commit(run, files)` overwrites the ledger partition
-  *    `run=<runId>` — committing twice is a no-op, and a crash
-  *    between process and commit re-processes only that run's files.
+  *    `run=<runId>` with exactly the snapshot's paths — committing
+  *    twice is a no-op, and a crash between process and commit
+  *    re-processes only that run's files.
   *
   * Scale shape: the ledger is a path-narrow parquet table partitioned
   * by run (bounded by files-ever-seen — millions of rows at 100 TB,
@@ -25,39 +30,30 @@ import org.apache.spark.sql.functions._
   * (`binaryFile` metadata-only scan — bodies are NOT read); the
   * anti-join is one skinny hash join. No driver-side file set, no
   * reprocessing scan of old data — cost per run is proportional to the
-  * CURRENT listing, and the processed corpus is never re-read.
+  * CURRENT listing, and the processed corpus is never re-read. The
+  * snapshot lives in executor block storage until `Caches.releaseAll`,
+  * so a run commits before it releases.
   */
 object FileLedger {
 
-  private def emptyLedger(spark: SparkSession): DataFrame =
-    spark.createDataFrame(
-      new java.util.ArrayList[org.apache.spark.sql.Row](),
-      org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField("path",
-          org.apache.spark.sql.types.StringType),
-        org.apache.spark.sql.types.StructField("run",
-          org.apache.spark.sql.types.LongType))))
+  private val LedgerSchema = "path STRING, run BIGINT"
 
   /** The distinct processed paths with the run that first ingested
     * each (min run id — duplicate commits across runs fold away).
-    * A ledger dir that exists but holds NO readable parquet (a crash
-    * during the very first commit leaves only `_temporary` debris,
-    * which Spark's file index excludes) is an EMPTY ledger, not an
-    * error — otherwise the crash-replay path the scaladoc promises
-    * would throw on schema inference instead of re-selecting. */
+    * Read with the ledger's known schema (`run` is the partition
+    * column), so no footer-inference job runs; a ledger dir that holds
+    * NO readable parquet (a crash during the very first commit leaves
+    * only `_temporary` debris, which Spark's file index excludes) reads
+    * as an EMPTY ledger, which the crash-replay path relies on. */
   def ledger(spark: SparkSession, ledgerDir: String): DataFrame = {
     val p = new org.apache.hadoop.fs.Path(ledgerDir)
     val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
-    if (!fs.exists(p)) return emptyLedger(spark)
-    try spark.read.parquet(ledgerDir)
-      .groupBy(col("path")).agg(min(col("run").cast("long")).as("run"))
-    catch {
-      // only the no-readable-parquet conditions mean "empty ledger";
-      // anything else (corrupt footer, permission) must surface
-      case e: org.apache.spark.sql.AnalysisException
-          if e.getCondition == "UNABLE_TO_INFER_SCHEMA" ||
-             e.getCondition == "PATH_NOT_FOUND" => emptyLedger(spark)
-    }
+    val raw =
+      if (fs.exists(p)) spark.read.schema(LedgerSchema).parquet(ledgerDir)
+      else spark.createDataFrame(
+        new java.util.ArrayList[org.apache.spark.sql.Row](),
+        org.apache.spark.sql.types.StructType.fromDDL(LedgerSchema))
+    raw.groupBy(col("path")).agg(min(col("run")).as("run"))
   }
 
   /** Metadata-only listing of `glob` as (path, n_bytes) — the shared
@@ -87,13 +83,14 @@ object FileLedger {
     }
 
   /** Files under `glob` not yet committed by any OTHER run: the set
-    * this `runId` must process. */
+    * this `runId` must process, as a snapshot of the listing taken
+    * now (see the class doc). */
   def newFiles(spark: SparkSession, glob: String, ledgerDir: String,
       runId: Long): DataFrame = {
     val done = ledger(spark, ledgerDir)
       .filter(col("run") =!= runId)
       .select(col("path"))
-    listing(spark, glob).join(done, Seq("path"), "left_anti")
+    graft.Caches.checkpoint(listing(spark, glob).join(done, Seq("path"), "left_anti"))._1
   }
 
   /** Commit this run's processed file set: overwrite the ledger

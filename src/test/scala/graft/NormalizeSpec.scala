@@ -235,6 +235,90 @@ class NormalizeSpec extends SparkSpec {
     assert(d("2023-5") == "enforcement_failure")
   }
 
+  // one staged root holding every group verdict the pipeline can reach
+  private lazy val mixedRoot: String = {
+    val root = Files.createTempDirectory("graft_mixed")
+    val teams =
+      """[{"team_key": "1", "team_name": "A", "team_country": "X",
+        |  "venue": {"venue_name": "V", "venue_city": "C"}}]""".stripMargin
+    def standings(league: Int, teamId: String = "1", pts: String = "10") =
+      s"""[{"team_id": "$teamId", "team_name": "A", "league_id": "$league",
+         |  "league_name": "L", "overall_league_position": "1",
+         |  "overall_league_PTS": "$pts", "overall_league_payed": "4",
+         |  "overall_league_W": "3", "overall_league_D": "1", "overall_league_L": "0",
+         |  "overall_league_GF": "9", "overall_league_GA": "2",
+         |  "overall_league_form": "WWWD"}]""".stripMargin
+    // healthy
+    write(root, "api/season_2023/league_10/teams/run_1.json", teams)
+    write(root, "api/season_2023/league_10/standings/run_1.json", standings(10))
+    // truncated file
+    write(root, "api/season_2023/league_11/teams/run_1.json", teams)
+    write(root, "api/season_2023/league_11/standings/run_1.json", """[{"team_id": "1", "team_na""")
+    // non-numeric points in the latest run; the stale run is clean
+    write(root, "api/season_2023/league_12/teams/run_1.json", teams)
+    write(root, "api/season_2023/league_12/standings/run_1.json", standings(12))
+    write(root, "api/season_2023/league_12/standings/run_2.json", standings(12, pts = "abc"))
+    // unjoinable: no standings row matches a team
+    write(root, "api/season_2023/league_13/teams/run_1.json", teams)
+    write(root, "api/season_2023/league_13/standings/run_1.json", standings(13, teamId = "2"))
+    // empty response
+    write(root, "api/season_2023/league_14/teams/run_1.json", teams)
+    write(root, "api/season_2023/league_14/standings/run_1.json", "[]")
+    // path outside the season/league layout: the 'unknown' pk
+    write(root, "api/misc/batch1/teams/run_1.json", teams)
+    write(root, "api/misc/batch1/standings/run_1.json", standings(9))
+    root.toString
+  }
+
+  test("one staged root with every verdict: dead rows are (pk, error, files), one per failed group") {
+    val (ok, dead) = Normalize.pipeline(spark, s"$mixedRoot/api", "apifootball")
+    assert(dead.columns.toSeq == Seq("pk", "error", "files"))
+    assert(ok.select("pk").as[String].collect().toSeq == Seq("2023-10-1"))
+    val got = dead.collect().map { r =>
+      (r.getString(0), r.getString(1), r.getSeq[String](2).map(_.split("/api/").last))
+    }.toSet
+    assert(got == Set(
+      ("2023-11", "corrupt_input",
+        Seq("season_2023/league_11/standings/run_1.json", "season_2023/league_11/teams/run_1.json")),
+      ("2023-12", "enforcement_failure",
+        Seq("season_2023/league_12/standings/run_1.json", "season_2023/league_12/standings/run_2.json",
+          "season_2023/league_12/teams/run_1.json")),
+      ("2023-13", "empty_or_unjoinable_group",
+        Seq("season_2023/league_13/standings/run_1.json", "season_2023/league_13/teams/run_1.json")),
+      ("2023-14", "empty_or_unjoinable_group",
+        Seq("season_2023/league_14/standings/run_1.json", "season_2023/league_14/teams/run_1.json")),
+      ("unknown", "enforcement_failure",
+        Seq("misc/batch1/standings/run_1.json", "misc/batch1/teams/run_1.json"))),
+      got.mkString("\n"))
+    graft.Caches.releaseAll()
+  }
+
+  test("writing ok then dead runs the staged text probe once: dead reads it from a loaded pin") {
+    import org.apache.spark.sql.execution.columnar.InMemoryRelation
+    import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
+    import org.apache.spark.sql.execution.datasources.text.TextFileFormat
+    val (ok, dead) = Normalize.pipeline(spark, s"$mixedRoot/api", "apifootball")
+    // a text scan outside every pin would re-run the probe for that output
+    def unpinnedTextScans(df: org.apache.spark.sql.DataFrame) =
+      df.queryExecution.withCachedData.collect {
+        case l: LogicalRelation if (l.relation match {
+          case r: HadoopFsRelation => r.fileFormat.isInstanceOf[TextFileFormat]
+          case _ => false
+        }) => l
+      }
+    def pins(df: org.apache.spark.sql.DataFrame) =
+      df.queryExecution.withCachedData.collect { case r: InMemoryRelation => r }
+    assert(unpinnedTextScans(ok).isEmpty && unpinnedTextScans(dead).isEmpty)
+    assert(pins(dead).nonEmpty)
+    val out = Files.createTempDirectory("graft_once").toString
+    Sinks.writeUnified(ok, out, "apifootball")
+    // every pin `dead` reads was filled by the ok write
+    assert(pins(dead).forall(_.cacheBuilder.isCachedColumnBuffersLoaded))
+    Sinks.writeDeadLetter(dead, "pk", s"$out/dead")
+    assert(spark.read.text(s"$out/dead").count() == 5L)
+    graft.Caches.releaseAll()
+  }
+
   test("strict parse mirrors the reference validator's REQUIRED default (helpers.py:43)") {
     val json =
       """{"version": 1, "fields": [
@@ -277,7 +361,11 @@ class NormalizeSpec extends SparkSpec {
   test("upsert sink: re-running one league never erases another (repaired WRITE_TRUNCATE)") {
     val out = Files.createTempDirectory("graft_upsert").toString
     val (okA, _) = Normalize.pipeline(spark, s"$stagedRoot/apifootball", "apifootball")
+    val modeKey = "spark.sql.sources.partitionOverwriteMode"
+    val modeBefore = spark.conf.getOption(modeKey)
     Sinks.writeUnifiedUpsert(okA, out, "apifootball")
+    // the dynamic overwrite is a per-write option: the session is untouched
+    assert(spark.conf.getOption(modeKey) == modeBefore)
     // a different league's run: same table, disjoint partition
     val okB = okA
       .withColumn("league_id", lit("954"))

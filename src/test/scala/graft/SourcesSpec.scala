@@ -276,4 +276,26 @@ class SourcesSpec extends SparkSpec {
     assert(names(FileLedger.newFiles(spark, glob, led, 4L)) == Set("d.txt"))
     assert(names(FileLedger.newFiles(spark, glob, led, 4L)) == Set("d.txt"))
   }
+
+  test("file ledger: a file staged between newFiles and commit stays new for the next run") {
+    import graft.sources.FileLedger
+    val root = Files.createTempDirectory("graft_ledger_late").toString
+    val (files, led) = (s"$root/files", s"$root/ledger")
+    Files.createDirectories(Paths.get(files))
+    def put(name: String): Unit = {
+      Files.writeString(Paths.get(files, name), s"content of $name")
+      ()
+    }
+    def names(df: org.apache.spark.sql.DataFrame): Set[String] =
+      df.select("path").collect().map(_.getString(0).split('/').last).toSet
+    val glob = s"$files/*.txt"
+    put("a.txt")
+    val run1 = FileLedger.newFiles(spark, glob, led, 1L)
+    // lands after run 1 listed its input: run 1 never processed it
+    put("late.txt")
+    assert(names(run1) == Set("a.txt"))
+    FileLedger.commit(spark, run1, led, 1L)
+    assert(names(FileLedger.ledger(spark, led)) == Set("a.txt"))
+    assert(names(FileLedger.newFiles(spark, glob, led, 2L)) == Set("late.txt"))
+  }
 }
