@@ -161,9 +161,8 @@ object Caches {
     * CONCURRENCY CONTRACT: the flip is session-wide and consulted at
     * action time, so any OTHER query running actions on the SAME
     * session while a wrapped loop is in flight plans without AQE for
-    * that window — in particular engine/Normalize's joins, whose
-    * broadcast conversion is AQE-provided since the static hints were
-    * dropped, would silently fall back to shuffle joins. This is safe
+    * that window — in particular a join whose broadcast conversion is
+    * AQE-provided would silently fall back to a shuffle join. This is safe
     * under the library's documented execution model (one logical
     * query per session at a time — the same single-process contract
     * Caches.scoped and the staging work dirs already assume); if
@@ -171,7 +170,6 @@ object Caches {
     * a per-query scope (SQLConf.withExistingConf / a cloned session)
     * rather than a set/restore on the shared conf. */
   def staticLoopPlans[T](spark: org.apache.spark.sql.SparkSession)(f: => T): T = {
-    if (sys.env.contains("GRAFT_DEV_AQE_LOOPS")) return f // dev A/B only
     val k = "spark.sql.adaptive.enabled"
     val prev = spark.conf.get(k)
     spark.conf.set(k, "false")

@@ -28,8 +28,8 @@ import org.apache.spark.sql.functions._
   * 100 TB the split costs one scan per consumed output. A caller that
   * writes BOTH outputs pins the annotated frame once and derives both
   * from it: `Normalize.pipeline` pins [[tagByGroup]]'s frame and takes
-  * its ok rows with [[okGroups]] and its dead verdicts with one
-  * aggregate over the same pin.
+  * its ok rows with [[okGroups]] and its dead verdicts from each
+  * group's first row of the same pin.
   */
 object Enforce {
 

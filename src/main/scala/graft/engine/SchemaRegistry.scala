@@ -22,8 +22,8 @@ import graft.engine.Enforce.FieldSpec
   *
   * The parser is a small regex-based reader for exactly this document
   * shape (driver-side config parsing, one tiny file per job — not a
-  * data-plane JSON path; data-plane JSON goes through
-  * `spark.read.json`).
+  * data-plane JSON path; data-plane JSON is parsed by `from_json`
+  * with fixed schemas in `Normalize`).
   */
 object SchemaRegistry {
 

@@ -132,8 +132,8 @@ object Football {
     * algebra), so file layout, worker-side JSON reads, both
     * normalizers, enforcement, the dead-letter taxonomy AND the
     * latest-run-per-endpoint rule (stale run_0 files staged in two
-    * endpoint dirs; the oracle replays `latestOnly` as a QUALIFY on
-    * max filename per directory) are all hash-gated — previously only
+    * endpoint dirs; the oracle replays the latest-run-per-directory
+    * rule as a QUALIFY on max filename per directory) are all hash-gated — previously only
     * spec-gated (r8 VERDICT gap).
     *
     * Engineered groups: apifootball 2023-101 healthy (one team omits
@@ -144,8 +144,8 @@ object Football {
     * unjoinable. The corrupt-input class is ALSO driver-gated: group
     * 2021-104 stages a single unparseable teams file
     * (`corrupt_0.json`); Spark dead-letters it through the REAL
-    * whole-file parse-probe path (`Normalize.corruptPks`, ref
-    * `transforms.py:167-169`), while the oracle's read_json globs
+    * whole-file parse probe in `Normalize.pipeline`'s single text
+    * scan (ref `transforms.py:167-169`), while the oracle's read_json globs
     * name `run_*.json` only (a filename predicate — so DuckDB never
     * parses the corrupt bytes) and derive the `corrupt_input` dead
     * row from `glob()`, which lists files without reading them.
@@ -165,9 +165,9 @@ object Football {
     * acquisition is driver-side, never a distributed job). */
   val q86ParityPipeline: Q = {
     val root = graft.engine.WorkDirs.runScoped("q86_stage")
-    // the latestOnly replay: only the lexicographically-latest run file
-    // per endpoint DIRECTORY participates (Normalize.latestOnly —
-    // without it a second staged run joins 2x teams against 2x
+    // the latest-run replay: only the lexicographically-latest run file
+    // per endpoint DIRECTORY participates (Normalize.pipeline's
+    // per-directory max_by — without it a second staged run joins 2x teams against 2x
     // standings and every row quadruplicates)
     val latest = "QUALIFY filename = max(filename) OVER " +
       "(PARTITION BY regexp_replace(filename, '/[^/]*$', ''))"
@@ -389,8 +389,8 @@ object Football {
         (2022, 103, "teams", () => fbTeams(slice(8, 2), 1000L)),
         (2022, 103, "standings",
           () => fbStandings(slice(8, 2), 1000L, 103, keyShift = 8000L))))
-      // STALE earlier runs in the SAME endpoint dirs: latestOnly must
-      // exclude them — participation would add shifted-points rows
+      // STALE earlier runs in the SAME endpoint dirs: the latest-run
+      // rule must exclude them — participation would add shifted-points rows
       // (apifootball) / duplicate every join row (apisports, identical
       // content re-staged), either of which trips the hash gate
       Staging.stageAll(s"$root/apifootball", "run_0", Seq(

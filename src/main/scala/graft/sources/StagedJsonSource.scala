@@ -197,7 +197,7 @@ final class StagedJsonScan(root: String, required: StructType,
     val fs = new HPath(root).getFileSystem(conf.value)
     // a root that does not exist (yet) is an EMPTY table, not a
     // planning-time FileNotFoundException — the same contract as the
-    // engine's glob readers (Normalize.staged, FileLedger.newFiles):
+    // engine's glob readers (Normalize.pipeline, FileLedger.newFiles):
     // ingestion pipelines routinely plan against a landing dir the
     // producer has not created on the first run
     if (!fs.exists(new HPath(root))) return Array.empty

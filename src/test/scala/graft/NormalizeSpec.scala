@@ -319,6 +319,90 @@ class NormalizeSpec extends SparkSpec {
     graft.Caches.releaseAll()
   }
 
+  test("one group's mistyped field does not change how another group's fields parse") {
+    val root = Files.createTempDirectory("graft_crossgroup")
+    def teams(id: Int) =
+      s"""{"response": [{"team": {"id": $id, "name": "A", "country": "X"},
+         |  "venue": {"name": "V", "city": "C"}}]}""".stripMargin
+    def standings(league: Int, id: Int, points: String) =
+      s"""{"response": [{"league": {"id": $league, "name": "L", "season": 2023,
+         |  "standings": [[{"rank": 1, "team": {"id": $id, "name": "A"}, "points": $points,
+         |    "goalsDiff": 1, "form": "W", "all": {"played": 1, "win": 1, "draw": 0, "lose": 0,
+         |    "goals": {"for": 2, "against": 1}}}]]}}]}""".stripMargin
+    write(root, "api/season_2023/league_21/teams/run_1.json", teams(1))
+    write(root, "api/season_2023/league_21/standings/run_1.json", standings(21, 1, "\"abc\""))
+    write(root, "api/season_2023/league_22/teams/run_1.json", teams(2))
+    write(root, "api/season_2023/league_22/standings/run_1.json", standings(22, 2, "7"))
+    val (ok, _) = Normalize.pipeline(spark, s"$root/api", "apisports")
+    val clean = ok.filter(col("pk") === "2023-22-2").select("points").collect()
+      .map(r => Option(r.get(0))).toSeq
+    assert(clean == Seq(Some(7L)), clean)
+    graft.Caches.releaseAll()
+  }
+
+  test("dead-letter files are the file system's own path strings") {
+    val root = Files.createTempDirectory("graft_paths")
+    write(root, "api/season_2023/league_31/teams/run 1+a.json", "[{\"team_key\": ")
+    write(root, "api/season_2023/league_31/standings/run_1.json", "[]")
+    val (_, dead) = Normalize.pipeline(spark, s"$root/api", "apifootball")
+    val files = dead.select("files").as[Seq[String]].collect().toSeq
+    val listed = spark.read.format("binaryFile").load(s"$root/api/*/*/*/*.json")
+      .select("path").as[String].collect().sorted.toSeq
+    assert(files == Seq(listed), s"$files vs $listed")
+    graft.Caches.releaseAll()
+  }
+
+  test("building the pipeline runs no Spark job; each output reads one file relation, the text scan") {
+    import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
+    import org.apache.spark.sql.execution.datasources.text.TextFileFormat
+    val ((ok, dead), jobs) = PlanLint.constructionJobSites(spark, "normalize_build") {
+      Normalize.pipeline(spark, s"$mixedRoot/api", "apifootball")
+    }
+    assert(jobs.isEmpty, jobs.mkString(","))
+    def fileScans(plan: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan) =
+      plan.collect { case LogicalRelation(r: HadoopFsRelation, _, _, _, _) => r }
+    for (df <- Seq(ok, dead)) {
+      val scans = fileScans(df.queryExecution.analyzed)
+      assert(scans.size == 1 && scans.head.fileFormat.isInstanceOf[TextFileFormat],
+        scans.mkString(","))
+    }
+    graft.Caches.releaseAll()
+  }
+
+  test("two non-conforming directories in the 'unknown' group each keep their own latest run") {
+    def teams(id: Int) =
+      s"""[{"team_key": "$id", "team_country": "X",
+         |  "venue": {"venue_name": "V", "venue_city": "C"}}]""".stripMargin
+    def standings(id: Int) =
+      s"""[{"team_id": "$id", "team_name": "A", "league_id": "9",
+         |  "overall_league_PTS": "10"}]""".stripMargin
+    // (batch, endpoint) -> (stale run_1 team id, latest run_2 team id)
+    def verdict(ids: Map[(String, String), (Int, Int)]): String = {
+      val root = Files.createTempDirectory("graft_unknown_dirs")
+      for (((batch, ep), (stale, latest)) <- ids; (run, id) <- Seq(1 -> stale, 2 -> latest))
+        write(root, s"api/misc/$batch/$ep/run_$run.json",
+          if (ep == "teams") teams(id) else standings(id))
+      val (ok, dead) = Normalize.pipeline(spark, s"$root/api", "apifootball")
+      assert(ok.count() == 0)
+      val d = dead.collect()
+      assert(d.map(_.getString(0)).toSeq == Seq("unknown"))
+      assert(d.head.getSeq[String](2).size == 8)
+      graft.Caches.releaseAll()
+      d.head.getString(1)
+    }
+    // per-directory latest: teams {1, 2} x standings {3, 1} join on
+    // team 1 — the unknown group's rows fail enforcement. Only the
+    // group-wide latest files (batch2's) would leave {2} x {1}: no join.
+    assert(verdict(Map(
+      ("batch1", "teams") -> (9, 1), ("batch1", "standings") -> (9, 3),
+      ("batch2", "teams") -> (9, 2), ("batch2", "standings") -> (9, 1))) == "enforcement_failure")
+    // the latest runs join nothing; only the stale runs (team 9) would
+    assert(verdict(Map(
+      ("batch1", "teams") -> (9, 1), ("batch1", "standings") -> (9, 3),
+      ("batch2", "teams") -> (9, 2), ("batch2", "standings") -> (9, 4))) ==
+      "empty_or_unjoinable_group")
+  }
+
   test("strict parse mirrors the reference validator's REQUIRED default (helpers.py:43)") {
     val json =
       """{"version": 1, "fields": [
