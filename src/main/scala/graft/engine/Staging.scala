@@ -39,8 +39,6 @@ object Staging {
       p
     }
 
-    def stagedPaths: Seq[Path] = written.toSeq
-
     /** K4: delete everything this run wrote (idempotent). */
     def rollback(): Unit = {
       written.foreach(p => Files.deleteIfExists(p))

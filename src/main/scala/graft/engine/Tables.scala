@@ -245,6 +245,4 @@ final case class Q(
 object Q {
   def apply(name: String, oracle: String)(fn: (SparkSession, String) => DataFrame): Q =
     Q(name, fn, Some(oracle))
-  def noOracle(name: String)(fn: (SparkSession, String) => DataFrame): Q =
-    Q(name, fn, None)
 }

@@ -243,14 +243,10 @@ object Dedup {
       .distinct()
   }
 
-  /** Exact n-gram Jaccard verification of candidate pairs: join the
-    * shingle sets back and compute |∩|/|∪| precisely. Only candidates
-    * pay the set-intersection cost. */
-  def verifyJaccard(docs: DataFrame, id: Column, text: Column,
-      candidates: DataFrame, n: Int = DefaultShingleN, threshold: Double = 0.8): DataFrame =
-    verifyJaccardOnShingles(shingleFrame(docs, id, text, n), candidates, threshold)
-
-  /** Same, over a prepared (doc_id, s) shingle frame.
+  /** Exact n-gram Jaccard verification of candidate pairs over a
+    * prepared (doc_id, s) shingle frame: join the shingle sets back and
+    * compute |∩|/|∪| precisely. Only candidates pay the
+    * set-intersection cost.
     *
     * Two exactness-preserving optimizations (the result set is
     * identical, only non-qualifying pairs are skipped / the same

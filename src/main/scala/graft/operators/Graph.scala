@@ -34,15 +34,9 @@ object Graph {
 
   /** The iterative loops' per-round join hint (see pageRankRound's
     * rationale: SHJ streams the pinned edge frame unsorted instead of
-    * re-sorting it every round). Overridable per session via the
-    * `graft.dev.loopJoinHint` conf ("" disables hints) — a DEV-ONLY
-    * knob so DevLoopAB can A/B hinted vs planner-default rounds
-    * honestly (a conf like preferSortMergeJoin cannot: explicit hints
-    * win over it); production sessions never set it. */
-  private def hintLoop(df: DataFrame): DataFrame = {
-    val h = df.sparkSession.conf.get("graft.dev.loopJoinHint", "shuffle_hash")
-    if (h.isEmpty) df else df.hint(h)
-  }
+    * re-sorting it every round; the hinted-vs-default A/B is in
+    * NOTES.md, Round 12). */
+  private def hintLoop(df: DataFrame): DataFrame = df.hint("shuffle_hash")
 
   /** Distinct-per-container directed co-occurrence pairs: (src, dst)
     * for every pair of distinct members sharing a container (order,
@@ -55,7 +49,7 @@ object Graph {
     * container-keyed exchange whose map-side partial collect_set
     * combines before shuffling, and the pair generation is a narrow
     * explosion. Re-measured under healthy per-arm parallel probes
-    * (DevEdgeAB, r12): 0.91-1.02 s vs 1.65 s for the 907k-pair
+    * (NOTES.md, Round 12): 0.91-1.02 s vs 1.65 s for the 907k-pair
     * supplier co-occurrence build, repartition+distinct included —
     * ~1.7× on both AQE settings (the r11 "2×" was from a throttled
     * host). A sorted-set slice-based ordered-pair variant measured a
@@ -354,7 +348,7 @@ object Graph {
     // same partition-sizing discipline every shuffle here relies on;
     // trading SMJ spillability for no per-round edge sort is the
     // standard iterative-graph-engine join shape. HONEST STATUS
-    // (DevLoopAB r12, interleaved arms, per-arm parallel probes): at
+    // (NOTES.md Round 12, interleaved arms, per-arm parallel probes): at
     // fixture scale the hint is a WASH vs planner default (g01 3.49
     // vs 3.49, g05 3.12 vs 2.82, g04 2.71 vs 2.80, g07 2.31 vs 2.21 s
     // min-of-3) — the r11 "2×" was a throttled-host artifact. Kept on

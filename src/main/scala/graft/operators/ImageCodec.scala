@@ -28,8 +28,6 @@ object ImageCodec {
   val PpmMime = "image/x-portable-pixmap"
   val BmpMime = "image/bmp"
 
-  def canDecode(mime: String): Boolean = mime == PpmMime || mime == BmpMime
-
   def decode(mime: String, bytes: Array[Byte]): Image = mime match {
     case PpmMime => decodePpm(bytes)
     case BmpMime => decodeBmp24(bytes)

@@ -257,7 +257,7 @@ object Advanced {
   /** q87 — EXACTLY-ONCE incremental file ingestion
     * (sources.FileLedger): a staged tree grows in two runs (evens,
     * then odds added), each run ingests ONLY the files no other run
-    * has committed (metadata listing anti-join the parquet ledger),
+    * has committed (driver-side listing minus the JSON-lines ledger),
     * and commits by overwriting its own `run=<id>` ledger partition —
     * the continuous-ingestion contract (new shards process exactly
     * once; a replayed run re-selects its own set, never double-

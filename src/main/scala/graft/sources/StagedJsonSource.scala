@@ -196,8 +196,9 @@ final class StagedJsonScan(root: String, required: StructType,
     // are the cost being pruned
     val fs = new HPath(root).getFileSystem(conf.value)
     // a root that does not exist (yet) is an EMPTY table, not a
-    // planning-time FileNotFoundException — the same contract as the
-    // engine's glob readers (Normalize.pipeline, FileLedger.newFiles):
+    // planning-time FileNotFoundException — the same contract as
+    // Normalize.pipeline's guarded glob read and FileLedger.listing
+    // (a glob that matches nothing is an empty input):
     // ingestion pipelines routinely plan against a landing dir the
     // producer has not created on the first run
     if (!fs.exists(new HPath(root))) return Array.empty

@@ -193,10 +193,10 @@ object DriverActionReviewed {
     // (staging is driver-side by the reference's own design); the
     // audited query is the staged read→normalize→enforce→split chain
     "q86_parity_pipeline",
-    // q87 = the q69/q86 materializing-fixture class (≤120-doc collect
-    // writes the two arrival waves) plus the ledger COMMITS, which are
-    // the operator's own exactly-once protocol — the audited read is
-    // the ledger⋈listing aggregation
+    // q87 = the q69/q86 materializing-fixture class: the ≤120-doc
+    // collect writes the two arrival waves (the ledger's listing,
+    // snapshot and commits run on the driver and submit no job) — the
+    // audited read is the ledger⋈listing aggregation
     "q87_incremental_ingest",
     // s69/s70 = the codebook-strategy PROBE (limit(threshold+1)
     // collect at Similarity.scala): one bounded driver action that

@@ -298,4 +298,87 @@ class SourcesSpec extends SparkSpec {
     assert(names(FileLedger.ledger(spark, led)) == Set("a.txt"))
     assert(names(FileLedger.newFiles(spark, glob, led, 2L)) == Set("late.txt"))
   }
+
+  // fixture for the driver-side ledger cases below: a files dir and a
+  // ledger dir under a fresh temp root
+  private def ledgerDirs(prefix: String): (String, String) = {
+    val root = Files.createTempDirectory(prefix).toString
+    Files.createDirectories(Paths.get(root, "files"))
+    (s"$root/files", s"$root/ledger")
+  }
+  private def stageFile(dir: String, name: String): Unit = write(dir, name, s"content of $name")
+  private def fileNames(df: org.apache.spark.sql.DataFrame): Set[String] =
+    df.select("path").collect().map(_.getString(0).split('/').last).toSet
+
+  test("file ledger: newFiles and commit run on the driver and submit no Spark job") {
+    import graft.sources.FileLedger
+    val (files, led) = ledgerDirs("graft_ledger_jobs")
+    val glob = s"$files/*.txt"
+    stageFile(files, "a.txt"); stageFile(files, "b.txt")
+    val (_, jobs) = PlanLint.constructionJobSites(spark, "ledger_jobs") {
+      FileLedger.commit(spark, FileLedger.newFiles(spark, glob, led, 1L), led, 1L)
+      stageFile(files, "c.txt")
+      // run 2 reads run 1's commit back before it lists
+      val run2 = FileLedger.newFiles(spark, glob, led, 2L)
+      FileLedger.commit(spark, run2, led, 2L)
+    }
+    assert(jobs.isEmpty, jobs.mkString("; "))
+    val folded = FileLedger.ledger(spark, led).collect()
+      .map(r => r.getString(0).split('/').last -> r.getLong(1)).toMap
+    assert(folded == Map("a.txt" -> 1L, "b.txt" -> 1L, "c.txt" -> 2L))
+  }
+
+  test("file ledger: listing equals binaryFile's (path, length), hidden names included") {
+    import graft.sources.FileLedger
+    val (files, _) = ledgerDirs("graft_ledger_listing")
+    Seq("a b.json", "a+b.json", "a%b.json", "a%20b.json", "_x.json", ".x.json",
+      "x.json._COPYING_", "sub.json/in.txt", "sub.json/_in.txt", "sub.json/deeper/d.txt")
+      .foreach(stageFile(files, _))
+    Files.createFile(Paths.get(files, "empty.json"))
+    val glob = s"$files/*.json"
+    def rows(df: org.apache.spark.sql.DataFrame): Set[(String, Long)] =
+      df.collect().map(r => (r.getString(0), r.getLong(1))).toSet
+    val want = rows(spark.read.format("binaryFile").load(glob).select(col("path"), col("length")))
+    // the four plain names and the matched directory's direct child
+    assert(want.map(_._1.split('/').last) ==
+      Set("a b.json", "a+b.json", "a%b.json", "a%20b.json", "in.txt"))
+    assert(rows(FileLedger.listing(spark, glob)) == want)
+  }
+
+  test("file ledger: a commit interrupted mid-write leaves the previous ledger state") {
+    import graft.sources.FileLedger
+    import org.apache.hadoop.fs.Path
+    import org.apache.spark.sql.execution.streaming.checkpointing.CheckpointFileManager
+    val (files, led) = ledgerDirs("graft_ledger_torn")
+    val glob = s"$files/*.txt"
+    stageFile(files, "a.txt")
+    FileLedger.commit(spark, FileLedger.newFiles(spark, glob, led, 1L), led, 1L)
+    stageFile(files, "b.txt")
+    // run 2 dies inside its atomic write: only the temp file exists
+    val dir = new Path(s"$led/run=2")
+    val fm = CheckpointFileManager.create(dir, spark.sessionState.newHadoopConf())
+    fm.mkdirs(dir)
+    val out = fm.createAtomic(new Path(dir, "paths.jsonl"), overwriteIfPossible = true)
+    try {
+      out.write(s"""{"path":"file:$files/b.txt"}\n""".getBytes("UTF-8"))
+      out.hflush()
+      val left = Files.list(Paths.get(s"$led/run=2")).toArray.map(_.toString.split('/').last)
+      assert(left.nonEmpty && left.forall(_.startsWith(".")), left.mkString(", "))
+      assert(fileNames(FileLedger.ledger(spark, led)) == Set("a.txt"))
+      assert(fileNames(FileLedger.newFiles(spark, glob, led, 2L)) == Set("b.txt"))
+    } finally out.cancel()
+  }
+
+  test("file ledger: a path holding a newline round-trips through commit and ledger") {
+    import graft.sources.FileLedger
+    val (files, led) = ledgerDirs("graft_ledger_newline")
+    val glob = s"$files/*.txt"
+    stageFile(files, "two\nlines.txt"); stageFile(files, "plain.txt")
+    val run1 = FileLedger.newFiles(spark, glob, led, 1L)
+    val listed = run1.select("path").collect().map(_.getString(0)).toSet
+    assert(listed.exists(_.endsWith("/two\nlines.txt")) && listed.size == 2)
+    FileLedger.commit(spark, run1, led, 1L)
+    assert(FileLedger.ledger(spark, led).select("path").collect().map(_.getString(0)).toSet == listed)
+    assert(FileLedger.newFiles(spark, glob, led, 2L).isEmpty)
+  }
 }
