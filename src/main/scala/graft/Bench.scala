@@ -468,44 +468,7 @@ object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      // harness opt-in for the nanos-generation events parquet (see Tables.events)
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // execution-time DPP even when exchange reuse misses under AQE
-      // (the r18 q76 finding — see TestSpark / Scale.q76DppPrune)
-      .config("spark.sql.optimizer.dynamicPartitionPruning.reuseBroadcastOnly", "false")
-      // r20 I/O configs (guide §6; measured on the s71-s76 layout
-      // lifecycle, OPTIMIZATION_r20.md): (a) list up to 1024 partition
-      // dirs on the driver instead of launching a distributed listing
-      // JOB per layout read (Spark's threshold of 32 is tuned for
-      // object stores; the lifecycle re-lists its 100-256 cell dirs
-      // 3-8× per query — 0.5-1.5 s of listing jobs each); production
-      // object-store deployments should keep the default or use a
-      // manifest table format. (b) committer v2: task commits rename
-      // straight into the destination — halves the commit renames on
-      // every partitioned write (the standard HDFS-era setting; local
-      // fs rename is atomic, and every graft write lands in a
-      // run-nonce-scoped dir, so concurrent-writer caveats don't
-      // apply).
-      .config("spark.sql.sources.parallelPartitionDiscovery.threshold", "1024")
-      .config("spark.hadoop.mapreduce.fileoutputcommitter.algorithm.version", "2")
-      // r21 engine config (guide §1.2 step 3, declared in
-      // OPTIMIZATION_r21.md): the default 100-entry whole-stage-
-      // codegen class cache thrashes on a 208-query catalogue — a
-      // single wide query (q86: ~155 generated classes) exceeds it
-      // alone, so the top-8 rerun leg recompiled essentially every
-      // class (measured: q86 rerun 107 recompiles / 4.7 s of Janino
-      // at 100 entries vs 24 / 0.7 s at 5000) and cross-query shared
-      // scan stages never hit. Capacity-bounded JVM infrastructure
-      // (compiled classes keyed on normalized source), NOT result
-      // caching: every run still computes from parquet. A production
-      // session serving hundreds of distinct plans wants the same.
-      .config("spark.sql.codegen.cache.maxEntries", "5000")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.builder(cpus.toInt).getOrCreate()
     // untimed warm-up actions so the first measured queries don't
     // absorb JVM/codegen/scan-index startup (~5s) — measurement
     // hygiene only, identical output contract. Warm-ups run at

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -7,26 +6,7 @@ object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // harness opt-in for the nanos-generation events parquet (see Tables.events)
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // execution-time DPP even when exchange reuse misses under AQE
-      // (the r18 q76 finding — see TestSpark / Scale.q76DppPrune)
-      .config("spark.sql.optimizer.dynamicPartitionPruning.reuseBroadcastOnly", "false")
-      // r20 I/O configs — same pair as Bench (driver-side partition
-      // listing for ≤1024 dirs + committer v2), see Bench.scala for
-      // the rationale and OPTIMIZATION_r20.md for the measurements
-      .config("spark.sql.sources.parallelPartitionDiscovery.threshold", "1024")
-      .config("spark.hadoop.mapreduce.fileoutputcommitter.algorithm.version", "2")
-      // r21: codegen class cache sized to the catalogue — see
-      // Bench.scala for the rationale and measurements
-      .config("spark.sql.codegen.cache.maxEntries", "5000")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.builder(cpus.toInt).getOrCreate()
     new java.io.File(outDir).mkdirs()
     // Dev-only subset filter (SPARK_GRAFT_ONLY=q60,q62); driver never sets it.
     val only = sys.env.get("SPARK_GRAFT_ONLY")
@@ -45,20 +25,12 @@ object Verify {
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
       }
     }
-    // JSON string escape: backslash, quote, and ALL control chars (<0x20)
-    // — a tab or CR in builder-authored SQL would otherwise make the
-    // driver's json.load fail and silently zero the round's correctness.
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
+    // Bench.jsonStr escapes every control char: a tab or CR in
+    // builder-authored SQL would otherwise make the driver's json.load
+    // fail and silently zero the round's correctness
     val json = SparkEntry.oracleSql.filter(kv => keep(kv._1))
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
+      .map { case (k, v) => s"${Bench.jsonStr(k)}: ${Bench.jsonStr(v)}" }
+      .mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     spark.stop()
   }

@@ -54,12 +54,13 @@ object Tables {
     * agrees).
     *
     * The `spark.sql.legacy.parquet.nanosAsLong` conf that unlocks the
-    * nanos generation is set by the HARNESS sessions (Verify / Bench /
-    * Explain / the test spec), never here: a library table reader must
-    * not flip session-global semantics under a co-tenant (their own
-    * nanos parquet would silently start arriving as longs). On a
-    * session without the flag, nanos-generation data fails loudly at
-    * the scan — the correct failure mode for an un-opted-in session.
+    * nanos generation is set by `GraftSession.builder` (every Bench,
+    * Verify, dev and test session), never here: a library table
+    * reader must not flip session-global semantics under a co-tenant
+    * (their own nanos parquet would silently start arriving as
+    * longs). On a session without the flag, nanos-generation data
+    * fails loudly at the scan — the correct failure mode for an
+    * un-opted-in session.
     */
   def events(spark: SparkSession, sfDir: String): DataFrame = {
     val raw = t(spark, sfDir, "events")

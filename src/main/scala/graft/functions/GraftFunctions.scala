@@ -8,12 +8,11 @@ import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
 /** SQL-surface registration for graft's custom expressions, so
   * `SELECT poly_hash(text)` works alongside the Column API.
   *
-  * Two entry points:
-  *  - `register(spark)`: imperative, for an existing session;
-  *  - `GraftExtensions`: a `SparkSessionExtensions` installer for
-  *    `spark.sql.extensions=graft.functions.GraftExtensions` /
-  *    `.withExtensions(new GraftExtensions)` at session build time —
-  *    the deployment path on a shared cluster.
+  * `register(spark)` adds the functions to an existing session.
+  * `GraftExtensions` installs them at session build time, together
+  * with the as-of join's planner strategy and pushdown rule:
+  * `GraftSession.builder` carries it, and a shared cluster deploys it
+  * as `spark.sql.extensions=graft.functions.GraftExtensions`.
   */
 object GraftFunctions {
 
@@ -74,14 +73,11 @@ object GraftFunctions {
         new ExpressionInfo(classOf[PolyHash].getName, name),
         builder))
     }
-    // whole-operator extension: lower graft's AsOfJoinPlan logical
-    // node to ordinary relational operators during resolution — or,
-    // under spark.graft.asof.physical=true, leave it standing and let
-    // the injected strategy plan the O(n+m) physical merge operator
-    e.injectResolutionRule(_ => graft.plans.AsOfJoinRewrite)
+    // whole-operator extension: a standing AsOfJoinPlan (built by
+    // asofJoinPhysical) plans as the O(n+m) physical merge operator,
+    // and left predicates push through it; the lowered form
+    // (asofJoin) never presents the node, so both are no-ops there
     e.injectPlannerStrategy(_ => graft.plans.AsOfJoinStrategy)
-    // physical path only: left predicates push through the standing
-    // node (after lowering the rule never sees one — no-op)
     e.injectOptimizerRule(_ => graft.plans.AsOfJoinPushdown)
   }
 }

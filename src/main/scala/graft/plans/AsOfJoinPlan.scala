@@ -5,29 +5,31 @@ import org.apache.spark.sql.GraftExpressionBridge
 import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.plans.LeftOuter
 import org.apache.spark.sql.catalyst.plans.logical._
-import org.apache.spark.sql.catalyst.rules.Rule
 
 /** As-of join as a first-class Catalyst LOGICAL OPERATOR — the
   * (c)-tier extension path of the build rules (custom `LogicalPlan` +
-  * `Rule[LogicalPlan]` via `SparkSessionExtensions`), for the one
+  * planner strategy via `SparkSessionExtensions`), for the one
   * whole-operator semantic Spark lacks (SURVEY.md §2.5 note;
   * `operators/AsOf` is the (a)-tier composed form of the same
   * operator).
   *
   * `AsOfJoinPlan` declares WHAT (each left row + the latest right row
-  * with rightTime ≤ leftTime per key); `AsOfJoinRewrite` lowers it to
-  * relational algebra Catalyst can optimize — Join(LeftOuter) +
-  * Window(row_number over per-left-row id) + Filter + Project — during
-  * resolution, so every downstream Catalyst phase (pushdown, join
-  * planning, AQE) sees ordinary operators. The lowering reuses the
-  * SAME determinism contract as `AsOf.asofJoin`: a unique left-row id
-  * keys the window (duplicate left rows both survive) and right-time
-  * ties break on the greatest right-column tuple.
+  * with rightTime ≤ leftTime per key). It has two plans. `asofJoin`
+  * lowers it eagerly (`lower`) to relational algebra Catalyst can
+  * optimize — Join(LeftOuter) + Window(row_number over per-left-row
+  * id) + Filter + Project — so every downstream Catalyst phase
+  * (pushdown, join planning, AQE) sees ordinary operators.
+  * `asofJoinPhysical` leaves it standing for [[AsOfJoinStrategy]] to
+  * plan as the O(n+m) merge operator (`AsOfMergeJoinExec`). The
+  * lowering reuses the SAME determinism contract as `AsOf.asofJoin`: a
+  * unique left-row id keys the window (duplicate left rows both
+  * survive) and right-time ties break on the greatest right-column
+  * tuple.
   *
-  * Scale: the lowered plan shuffles both sides once on the key; a
-  * future physical alternative (the union-sorted form) could be picked
-  * by a `SparkStrategy` without touching user code — exactly why the
-  * operator is declared logically.
+  * Scale: the lowered plan shuffles both sides once on the key; the
+  * physical alternative is picked by a `SparkStrategy` without
+  * touching user code — exactly why the operator is declared
+  * logically.
   */
 final case class AsOfJoinPlan(
     left: LogicalPlan, right: LogicalPlan,
@@ -42,21 +44,10 @@ final case class AsOfJoinPlan(
     copy(left = newLeft, right = newRight)
 }
 
-/** Resolution-phase lowering of AsOfJoinPlan. Registered by
-  * `GraftFunctions.install` / usable directly via `AsOfJoinPlan.rewrite`.
-  * With `spark.graft.asof.physical=true` the node is left standing for
-  * [[AsOfJoinStrategy]] to plan as the O(n+m) merge operator instead. */
-object AsOfJoinRewrite extends Rule[LogicalPlan] {
-  override def apply(plan: LogicalPlan): LogicalPlan =
-    if (conf.getConfString("spark.graft.asof.physical", "false") == "true") plan
-    else plan.transformUp {
-      case a: AsOfJoinPlan if a.childrenResolved => AsOfJoinPlan.lower(a)
-    }
-}
-
 object AsOfJoinPlan {
 
-  private[plans] def lower(a: AsOfJoinPlan): LogicalPlan = {
+  /** The node as Join(LeftOuter) + Window + Filter + Project. */
+  private[graft] def lower(a: AsOfJoinPlan): LogicalPlan = {
     // per-left-row id: the window partition key, so fully identical
     // left rows each emit one output row
     val lid = Alias(MonotonicallyIncreasingID(), "__asof_lid")()
@@ -80,36 +71,40 @@ object AsOfJoinPlan {
     Project(a.left.output ++ a.right.output, filtered)
   }
 
-  /** DataFrame entry point. Works on any session: the node is lowered
-    * eagerly here; sessions built `.withExtensions(new GraftExtensions)`
-    * also lower it automatically during analysis when the raw node is
-    * constructed some other way. */
+  /** DataFrame entry point for the lowered (Join + Window) form.
+    * Works on any session: the node is lowered eagerly here. */
   def asofJoin(left: DataFrame, right: DataFrame,
       leftKey: Column, rightKey: Column,
-      leftTime: Column, rightTime: Column): DataFrame = {
-    val node = AsOfJoinPlan(
-      GraftExpressionBridge.logicalPlan(left),
-      GraftExpressionBridge.logicalPlan(right),
-      resolve(left, leftKey), resolve(right, rightKey),
-      resolve(left, leftTime), resolve(right, rightTime))
-    GraftExpressionBridge.dataFrame(left.sparkSession, AsOfJoinRewrite(node))
-  }
+      leftTime: Column, rightTime: Column): DataFrame =
+    GraftExpressionBridge.dataFrame(left.sparkSession,
+      lower(node(left, right, leftKey, rightKey, leftTime, rightTime)))
 
   /** Physical-path entry: build the RAW node (no lowering) so the
     * planner's [[AsOfJoinStrategy]] turns it into the sorted-merge
-    * operator. Requires the strategy on the session — via
-    * `GraftExtensions` + `spark.graft.asof.physical=true`, or
-    * `spark.experimental.extraStrategies` on an existing session. */
+    * operator. `GraftSession` sessions carry the strategy through
+    * `GraftExtensions`; on any other session (a plain one, or the
+    * benchmark harness's) the strategy is appended once to
+    * `spark.experimental.extraStrategies`, so a session that already
+    * plans it is never mutated. */
   def asofJoinPhysical(left: DataFrame, right: DataFrame,
       leftKey: Column, rightKey: Column,
       leftTime: Column, rightTime: Column): DataFrame = {
-    val node = AsOfJoinPlan(
+    val spark = left.sparkSession
+    if (!spark.sessionState.planner.strategies.contains(AsOfJoinStrategy))
+      spark.experimental.extraStrategies =
+        spark.experimental.extraStrategies :+ AsOfJoinStrategy
+    GraftExpressionBridge.dataFrame(spark,
+      node(left, right, leftKey, rightKey, leftTime, rightTime))
+  }
+
+  private def node(left: DataFrame, right: DataFrame,
+      leftKey: Column, rightKey: Column,
+      leftTime: Column, rightTime: Column): AsOfJoinPlan =
+    AsOfJoinPlan(
       GraftExpressionBridge.logicalPlan(left),
       GraftExpressionBridge.logicalPlan(right),
       resolve(left, leftKey), resolve(right, rightKey),
       resolve(left, leftTime), resolve(right, rightTime))
-    GraftExpressionBridge.dataFrame(left.sparkSession, node)
-  }
 
   private def resolve(df: DataFrame, c: Column): Expression =
     GraftExpressionBridge.expressionEager(c) match {

@@ -132,8 +132,8 @@ final case class AsOfMergeJoinExec(
   * early cannot change any other row's match. Right-side predicates
   * must NOT push — filtering right rows before the join changes which
   * row is "latest" (filter-then-match ≠ match-then-filter).
-  * Registered by `GraftExtensions` (injectOptimizerRule) and usable
-  * via `spark.experimental.extraOptimizations`. */
+  * Registered by `GraftExtensions` (injectOptimizerRule); sessions
+  * without the extension plan the node unpushed. */
 object AsOfJoinPushdown extends org.apache.spark.sql.catalyst.rules.Rule[LogicalPlan]
     with PredicateHelper {
   import org.apache.spark.sql.catalyst.plans.logical.Filter
@@ -150,11 +150,10 @@ object AsOfJoinPushdown extends org.apache.spark.sql.catalyst.rules.Rule[Logical
 }
 
 /** Planner strategy mapping the logical as-of node to the merge
-  * operator. Active on sessions that leave the node standing (the
-  * `spark.graft.asof.physical=true` path of [[AsOfJoinRewrite]], or
-  * `spark.experimental.extraStrategies` on an existing session);
-  * sessions on the default lowering path never present the node, so
-  * the strategy is a no-op there. */
+  * operator. Registered by `GraftExtensions`, or appended once by
+  * `AsOfJoinPlan.asofJoinPhysical` on a session without it; the
+  * lowered form (`asofJoin`) never presents the node, so the strategy
+  * is a no-op there. */
 object AsOfJoinStrategy extends SparkStrategy {
   override def apply(plan: LogicalPlan): Seq[SparkPlan] = plan match {
     case a: AsOfJoinPlan =>

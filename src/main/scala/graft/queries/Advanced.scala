@@ -173,10 +173,9 @@ object Advanced {
   /** q68 — the PHYSICAL as-of merge operator, oracle-gated: q28's
     * exact semantics (same DuckDB ASOF JOIN oracle) executed through
     * `AsOfMergeJoinExec` — custom `SparkPlan` picked by
-    * `AsOfJoinStrategy` — instead of the Join+Window lowering. The
-    * strategy rides `spark.experimental.extraStrategies` (idempotently
-    * appended) so the driver's plain Verify/Bench sessions plan it
-    * without extension installation. */
+    * `AsOfJoinStrategy` — instead of the Join+Window lowering.
+    * `GraftSession` sessions carry the strategy; `asofJoinPhysical`
+    * appends it on any other session. */
   val q68AsofPhysical: Q = Q(
     "q68_asof_physical",
     """WITH p AS (
@@ -188,9 +187,6 @@ object Advanced {
       |ASOF LEFT JOIN p r
       |  ON l.user_id = r.user_id AND r.ts <= l.ts
       |ORDER BY l.event_id""".stripMargin) { (s, dir) =>
-    if (!s.experimental.extraStrategies.contains(graft.plans.AsOfJoinStrategy))
-      s.experimental.extraStrategies =
-        s.experimental.extraStrategies :+ graft.plans.AsOfJoinStrategy
     val ev = Tables.events(s, dir)
     val errors = ev.filter(col("event_type") === "error")
       .select(col("event_id"), col("user_id"), col("ts"))

@@ -551,7 +551,7 @@ object Scale {
     * shape's filter to `dynamicpruningexpression(true)` — the plan
     * text still says "dynamicpruning" but ALL partitions are read
     * (the exchange-reuse lookup misses against the re-optimized build
-    * side). The harness sessions set `reuseBroadcastOnly=false` —
+    * side). `GraftSession` sets `reuseBroadcastOnly=false` —
     * the recommended conf wherever this engine's partitioned layouts
     * are queried — which lets the benefit-qualified dim subquery run
     * independently and restores execution-time pruning. Operators

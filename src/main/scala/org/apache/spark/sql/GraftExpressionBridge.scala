@@ -18,6 +18,11 @@ object GraftExpressionBridge {
       plan: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan): DataFrame =
     classic.Dataset.ofRows(spark.asInstanceOf[classic.SparkSession], plan)
 
+  /** A session on `sc` with no extensions installed: what a driver
+    * gets that builds its own session without `GraftSession`. */
+  def plainSession(sc: org.apache.spark.SparkContext): SparkSession =
+    new classic.SparkSession(sc)
+
   /** The analyzed logical plan of a DataFrame. */
   def logicalPlan(df: Dataset[_]): org.apache.spark.sql.catalyst.plans.logical.LogicalPlan =
     df.queryExecution.analyzed

@@ -136,8 +136,7 @@ class AsOfSpec extends SparkSpec {
       .map(r => r.getLong(0) -> (if (r.isNullAt(1)) None else Some(r.getDouble(1)))).toMap
     assert(viaPlan == expected)
     assert(viaPlan == out)
-    // the node also resolves through a session built with the
-    // extensions installer (the shared-cluster deployment path)
+    // a raw node lowers to ordinary operators (what asofJoin applies)
     val raw = graft.plans.AsOfJoinPlan(
       org.apache.spark.sql.GraftExpressionBridge.logicalPlan(left),
       org.apache.spark.sql.GraftExpressionBridge.logicalPlan(right),
@@ -145,53 +144,45 @@ class AsOfSpec extends SparkSpec {
       org.apache.spark.sql.GraftExpressionBridge.expressionEager(right("p_user")),
       org.apache.spark.sql.GraftExpressionBridge.expressionEager(left("ts")),
       org.apache.spark.sql.GraftExpressionBridge.expressionEager(right("p_ts")))
-    val lowered = graft.plans.AsOfJoinRewrite(raw)
+    val lowered = graft.plans.AsOfJoinPlan.lower(raw)
     assert(!lowered.exists(_.isInstanceOf[graft.plans.AsOfJoinPlan]),
-      "rewrite must eliminate the custom node")
-  }
-
-  private def withPhysicalStrategy[T](body: => T): T = {
-    val saved = spark.experimental.extraStrategies
-    spark.experimental.extraStrategies = saved :+ graft.plans.AsOfJoinStrategy
-    try body finally spark.experimental.extraStrategies = saved
+      "lowering must eliminate the custom node")
   }
 
   test("PHYSICAL merge operator: plans AsOfMergeJoinExec, agrees on all semantic fixtures") {
-    withPhysicalStrategy {
-      val df = graft.plans.AsOfJoinPlan.asofJoinPhysical(left, right,
+    val df = graft.plans.AsOfJoinPlan.asofJoinPhysical(left, right,
+      col("user_id"), col("p_user"), col("ts"), col("p_ts"))
+    val p = df.queryExecution.executedPlan.toString
+    assert(p.contains("AsOfMergeJoin"), s"strategy did not fire:\n$p")
+    assert(!p.contains("Window") && !p.toLowerCase.contains("sortmergejoin"),
+      s"merge operator must not plan a join+window:\n$p")
+    assert(run(df) == expected)
+    // duplicate left rows + right-time ties: same contract as the
+    // logical forms (both dups emit; greatest tuple wins the tie)
+    val dupLeft = Seq(
+      (5L, 7L, ts("2024-01-01 12:00:00")),
+      (5L, 7L, ts("2024-01-01 12:00:00"))).toDF("event_id", "user_id", "ts")
+    val tieRight = Seq(
+      (7L, ts("2024-01-01 11:00:00"), 111.0),
+      (7L, ts("2024-01-01 11:00:00"), 222.0)).toDF("p_user", "p_ts", "value")
+    val tied = graft.plans.AsOfJoinPlan.asofJoinPhysical(dupLeft, tieRight,
         col("user_id"), col("p_user"), col("ts"), col("p_ts"))
-      val p = df.queryExecution.executedPlan.toString
-      assert(p.contains("AsOfMergeJoin"), s"strategy did not fire:\n$p")
-      assert(!p.contains("Window") && !p.toLowerCase.contains("sortmergejoin"),
-        s"merge operator must not plan a join+window:\n$p")
-      assert(run(df) == expected)
-      // duplicate left rows + right-time ties: same contract as the
-      // logical forms (both dups emit; greatest tuple wins the tie)
-      val dupLeft = Seq(
-        (5L, 7L, ts("2024-01-01 12:00:00")),
-        (5L, 7L, ts("2024-01-01 12:00:00"))).toDF("event_id", "user_id", "ts")
-      val tieRight = Seq(
-        (7L, ts("2024-01-01 11:00:00"), 111.0),
-        (7L, ts("2024-01-01 11:00:00"), 222.0)).toDF("p_user", "p_ts", "value")
-      val tied = graft.plans.AsOfJoinPlan.asofJoinPhysical(dupLeft, tieRight,
-          col("user_id"), col("p_user"), col("ts"), col("p_ts"))
-        .select(col("value")).collect().map(_.getDouble(0)).toSeq
-      assert(tied == Seq(222.0, 222.0), s"physical form: $tied")
-      // null keys and null times never match (the lowered-form contract)
-      val nullLeft = Seq(
-        (1L, Option(7L), Option(ts("2024-01-01 12:00:00"))),
-        (2L, Option.empty[Long], Option(ts("2024-01-01 12:00:00"))),
-        (3L, Option(7L), Option.empty[Timestamp])
-      ).toDF("event_id", "user_id", "ts")
-      val nullRight = Seq(
-        (Option(7L), Option(ts("2024-01-01 10:00:00")), 1.0),
-        (Option(7L), Option.empty[Timestamp], 2.0),
-        (Option.empty[Long], Option(ts("2024-01-01 10:00:00")), 3.0)
-      ).toDF("p_user", "p_ts", "value")
-      val nulls = run(graft.plans.AsOfJoinPlan.asofJoinPhysical(nullLeft, nullRight,
-        col("user_id"), col("p_user"), col("ts"), col("p_ts")))
-      assert(nulls == Map(1L -> Some(1.0), 2L -> None, 3L -> None))
-    }
+      .select(col("value")).collect().map(_.getDouble(0)).toSeq
+    assert(tied == Seq(222.0, 222.0), s"physical form: $tied")
+    // null keys and null times never match (the lowered-form contract)
+    val nullLeft = Seq(
+      (1L, Option(7L), Option(ts("2024-01-01 12:00:00"))),
+      (2L, Option.empty[Long], Option(ts("2024-01-01 12:00:00"))),
+      (3L, Option(7L), Option.empty[Timestamp])
+    ).toDF("event_id", "user_id", "ts")
+    val nullRight = Seq(
+      (Option(7L), Option(ts("2024-01-01 10:00:00")), 1.0),
+      (Option(7L), Option.empty[Timestamp], 2.0),
+      (Option.empty[Long], Option(ts("2024-01-01 10:00:00")), 3.0)
+    ).toDF("p_user", "p_ts", "value")
+    val nulls = run(graft.plans.AsOfJoinPlan.asofJoinPhysical(nullLeft, nullRight,
+      col("user_id"), col("p_user"), col("ts"), col("p_ts")))
+    assert(nulls == Map(1L -> Some(1.0), 2L -> None, 3L -> None))
   }
 
   test("PHYSICAL merge operator: random-data equivalence with the lowered form") {
@@ -210,44 +201,38 @@ class AsOfSpec extends SparkSpec {
         .toDF("p_user", "p_ts", "value")
       val lowered = run(graft.plans.AsOfJoinPlan.asofJoin(l, r,
         col("user_id"), col("p_user"), col("ts"), col("p_ts")))
-      val physical = withPhysicalStrategy {
-        run(graft.plans.AsOfJoinPlan.asofJoinPhysical(l, r,
-          col("user_id"), col("p_user"), col("ts"), col("p_ts")))
-      }
+      val physical = run(graft.plans.AsOfJoinPlan.asofJoinPhysical(l, r,
+        col("user_id"), col("p_user"), col("ts"), col("p_ts")))
       assert(physical == lowered, s"nl=${ls.size} nr=${rs.size}")
     }
   }
 
   test("optimizer rule: left predicates push through the standing node, right ones stay") {
-    val saved = spark.experimental.extraOptimizations
-    spark.experimental.extraOptimizations = saved :+ graft.plans.AsOfJoinPushdown
-    try withPhysicalStrategy {
-      val df = graft.plans.AsOfJoinPlan.asofJoinPhysical(left, right,
-          col("user_id"), col("p_user"), col("ts"), col("p_ts"))
-        .filter(col("event_id") > 1 && col("value") > 15.0)
-      val node = df.queryExecution.optimizedPlan.collectFirst {
-        case a: graft.plans.AsOfJoinPlan => a
-      }.getOrElse(fail("node missing from optimized plan"))
-      // the left-only conjunct moved below the node…
-      assert(node.left.collectFirst {
-        case f: org.apache.spark.sql.catalyst.plans.logical.Filter => f
-      }.exists(_.condition.references.map(_.name).toSet == Set("event_id")),
-        s"left filter not pushed:\n${df.queryExecution.optimizedPlan}")
-      // …the right-side conjunct did NOT (it would change which right
-      // row is latest), and results match filtering the lowered form
-      assert(node.right.collectFirst {
-        case f: org.apache.spark.sql.catalyst.plans.logical.Filter => f
-      }.isEmpty, "right filter must not push through an as-of join")
-      val want = AsOf.asofJoin(left, right,
-          col("user_id"), col("p_user"), col("ts"), col("p_ts"),
-          Seq("event_id"), Seq("value"))
-        .filter(col("event_id") > 1 && col("value") > 15.0)
-        .select(col("event_id"), col("value")).collect()
-        .map(r => r.getLong(0) -> r.getDouble(1)).toMap
-      val got = df.select(col("event_id"), col("value")).collect()
-        .map(r => r.getLong(0) -> r.getDouble(1)).toMap
-      assert(got == want && got == Map(2L -> 30.0))
-    } finally spark.experimental.extraOptimizations = saved
+    val df = graft.plans.AsOfJoinPlan.asofJoinPhysical(left, right,
+        col("user_id"), col("p_user"), col("ts"), col("p_ts"))
+      .filter(col("event_id") > 1 && col("value") > 15.0)
+    val node = df.queryExecution.optimizedPlan.collectFirst {
+      case a: graft.plans.AsOfJoinPlan => a
+    }.getOrElse(fail("node missing from optimized plan"))
+    // the left-only conjunct moved below the node: the left child is
+    // exactly the left side filtered alone (the injected rule runs in
+    // the operator-optimization batch, so the pushed filter is then
+    // folded into the local relation like any other)…
+    assert(node.left == left.filter(col("event_id") > 1).queryExecution.optimizedPlan,
+      s"left filter not pushed:\n${df.queryExecution.optimizedPlan}")
+    // …the right-side conjunct did NOT (it would change which right
+    // row is latest), and results match filtering the lowered form
+    assert(node.right == right.queryExecution.optimizedPlan,
+      s"right filter must not push through an as-of join:\n${df.queryExecution.optimizedPlan}")
+    val want = AsOf.asofJoin(left, right,
+        col("user_id"), col("p_user"), col("ts"), col("p_ts"),
+        Seq("event_id"), Seq("value"))
+      .filter(col("event_id") > 1 && col("value") > 15.0)
+      .select(col("event_id"), col("value")).collect()
+      .map(r => r.getLong(0) -> r.getDouble(1)).toMap
+    val got = df.select(col("event_id"), col("value")).collect()
+      .map(r => r.getLong(0) -> r.getDouble(1)).toMap
+    assert(got == want && got == Map(2L -> 30.0))
   }
 
   test("both forms agree on real data (events self as-of)") {

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions.col
 
 /** Dev-only measurement harness (test scope, never shipped) for the
@@ -26,13 +25,7 @@ object DevCrossover {
       .filterNot(a => jsonPath.contains(a))
     val sfDir = plain.headOption.getOrElse("/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.builder(cpus.toInt).getOrCreate()
     import graft.operators.Similarity
     val emb = graft.engine.Tables.embeddings(spark, sfDir)
     emb.persist(); emb.count() // take scan IO out of every cell

@@ -330,6 +330,45 @@ class PlanAuditSpec extends SparkSpec {
     assert(!p.contains("Window"), s"lowered join+window leaked into the physical path:\n$p")
   }
 
+  test("q68: the extension-carrying session plans the merge operator and is not mutated") {
+    val strategy = graft.plans.AsOfJoinStrategy
+    val before = spark.experimental.extraStrategies
+    val p = plan("q68_asof_physical")
+    assert(p.contains("AsOfMergeJoin") && !p.contains("Window"),
+      s"GraftExtensions must not lower the physical node:\n$p")
+    assert(spark.experimental.extraStrategies == before &&
+      !before.contains(strategy),
+      s"q68 appended to a session that already plans the strategy: $before")
+  }
+
+  test("q68: a session without the extension plans the merge operator through the fallback") {
+    val plain = org.apache.spark.sql.GraftExpressionBridge.plainSession(spark.sparkContext)
+    val strategy = graft.plans.AsOfJoinStrategy
+    assert(!plain.sessionState.planner.strategies.contains(strategy))
+    graft.Caches.releaseAll()
+    val q68 = SparkEntry.queries("q68_asof_physical")
+    val df = q68(plain, sfDir)
+    val p = df.queryExecution.executedPlan.toString
+    assert(p.contains("AsOfMergeJoin") && !p.contains("Window"),
+      s"fallback did not plan the merge operator:\n$p")
+    q68(plain, sfDir) // the append is idempotent
+    assert(plain.experimental.extraStrategies.count(_ == strategy) == 1)
+    assert(df.count() == q68(spark, sfDir).count())
+  }
+
+  test("only GraftSession.scala calls the SparkSession builder") {
+    import scala.jdk.CollectionConverters._
+    val call = """SparkSession\s*\.\s*builder\b""".r.unanchored
+    val callers = Seq("src/main", "src/test").flatMap { root =>
+      val files = java.nio.file.Files.walk(java.nio.file.Paths.get(root))
+      try files.iterator.asScala.filter(_.toString.endsWith(".scala")).toList
+      finally files.close()
+    }.filter(f => call.matches(java.nio.file.Files.readString(f)))
+      .map(_.getFileName.toString)
+    assert(callers == Seq("GraftSession.scala"),
+      s"session config belongs in GraftSession.builder: $callers")
+  }
+
   test("bucketed tables join with ZERO exchanges (the shuffle was paid at write time)") {
     // fact⋈fact at 100 TB: neither side broadcasts, so an unbucketed
     // join shuffles both corpora on every query. Layout.writeBucketed

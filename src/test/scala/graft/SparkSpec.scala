@@ -4,39 +4,19 @@ import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Shared local session for all suites (one JVM-wide session — Spark's
-  * getOrCreate makes this safe across suites).
+  * getOrCreate makes this safe across suites), built by `GraftSession`
+  * like every driver-facing session, extensions included.
   *
   * GRAFT_TEST_SHUFFLE overrides the shuffle partition count for
   * stress sweeps: partition-count-sensitive bugs (range-boundary
   * consistency, offset joins, per-partition state) hide at one fixed
   * count — run the suite at 1 and at a large odd count to flush them. */
 object TestSpark {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
+  // local[4] and no SPARK_GRAFT_CPUS read: the plan pins assume 4 cores
+  lazy val spark: SparkSession = GraftSession.builder(4)
     .appName("graft-test")
     .config("spark.sql.shuffle.partitions",
       sys.env.getOrElse("GRAFT_TEST_SHUFFLE", "4"))
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    // harness opt-in for the nanos-generation events parquet
-    // (see Tables.events — the library never sets this itself)
-    .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-    // under AQE, the default reuse-ONLY dynamic-partition-pruning
-    // path degrades to `dynamicpruningexpression(true)` — an UNPRUNED
-    // scan — whenever the exchange-reuse lookup misses (r18 finding:
-    // q76 read 3/3 partitions for three rounds while its text pin
-    // "passed"). Letting the benefit-qualified subquery run
-    // independently restores execution-time pruning; the recommended
-    // deployment conf, documented at Scale.q76DppPrune.
-    .config("spark.sql.optimizer.dynamicPartitionPruning.reuseBroadcastOnly", "false")
-    // r20 I/O configs — same pair as Bench/Verify (driver-side
-    // partition listing for ≤1024 dirs + committer v2), so the suite
-    // exercises the exact write/list path the driver surfaces run
-    .config("spark.sql.sources.parallelPartitionDiscovery.threshold", "1024")
-    .config("spark.hadoop.mapreduce.fileoutputcommitter.algorithm.version", "2")
-    // r21: codegen class cache sized to the catalogue — see
-    // Bench.scala for the rationale and measurements
-    .config("spark.sql.codegen.cache.maxEntries", "5000")
     .getOrCreate()
 }
 
