@@ -50,6 +50,8 @@ object Caches {
     new java.util.concurrent.ConcurrentLinkedQueue[Dataset[_]]()
   private val pinnedRdds =
     new java.util.concurrent.ConcurrentLinkedQueue[WeakReference[RDD[_]]]()
+  private val pinnedHolds =
+    new java.util.concurrent.ConcurrentLinkedQueue[() => Unit]()
 
   /** A thread-local pin scope: while active on the CURRENT thread,
     * pins/checkpoints register here instead of the global registry,
@@ -64,7 +66,10 @@ object Caches {
   private final class Scope {
     val ds = new scala.collection.mutable.ArrayBuffer[Dataset[_]]()
     val rdds = new scala.collection.mutable.ArrayBuffer[WeakReference[RDD[_]]]()
+    val holds = new scala.collection.mutable.ArrayBuffer[() => Unit]()
     def release(): Unit = {
+      holds.foreach(_())
+      holds.clear()
       ds.foreach(_.unpersist(blocking = false))
       ds.clear()
       rdds.foreach { ref =>
@@ -102,6 +107,14 @@ object Caches {
     val sc = currentScope.get()
     if (sc != null) sc.ds += ds else pinnedDs.add(ds)
     ds
+  }
+
+  /** Register driver-side state with a pin's lifetime: `release` runs
+    * once, at [[releaseAll]] or at the end of the active thread's
+    * [[scoped]] block (`Normalize.pipeline`'s observed dead letters). */
+  def hold(release: () => Unit): Unit = {
+    val sc = currentScope.get()
+    if (sc != null) sc.holds += release else pinnedHolds.add(release)
   }
 
   /** `localCheckpoint` whose storage blocks the registry can actually
@@ -223,6 +236,11 @@ object Caches {
     * and only those. See the class doc for when this is safe. */
   def releaseAll(): Unit = {
     releaseHooks.forEach(_.run())
+    var hold = pinnedHolds.poll()
+    while (hold != null) {
+      hold()
+      hold = pinnedHolds.poll()
+    }
     var ds = pinnedDs.poll()
     while (ds != null) {
       ds.unpersist(blocking = false)

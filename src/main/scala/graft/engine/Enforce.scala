@@ -26,10 +26,11 @@ import org.apache.spark.sql.functions._
   *
   * Scale: pure narrow per-row expressions — no shuffle, no UDF; at
   * 100 TB the split costs one scan per consumed output. A caller that
-  * writes BOTH outputs pins the annotated frame once and derives both
-  * from it: `Normalize.pipeline` pins [[tagByGroup]]'s frame and takes
-  * its ok rows with [[okGroups]] and its dead verdicts from each
-  * group's first row of the same pin.
+  * writes BOTH outputs can derive the smaller one inside the larger
+  * one's pass instead: `Normalize.pipeline` takes its ok rows from
+  * [[tagByGroup]]'s frame with [[okGroups]], and the ok write observes
+  * each failed group's dead-letter line from the same rows
+  * (`Dataset.observe`), so no second scan and no pin is needed.
   */
 object Enforce {
 

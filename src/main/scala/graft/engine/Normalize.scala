@@ -1,6 +1,11 @@
 package graft.engine
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import java.util.{Collections, IdentityHashMap}
+
+import scala.concurrent.Await
+import scala.concurrent.duration._
+
+import org.apache.spark.sql.{Column, DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{ArrayType, DataType}
 
@@ -216,13 +221,17 @@ object Normalize {
     * a staged root accumulates runs. The group's pairs are exploded
     * OUTER, so a group that joins nothing still has one row, and
     * [[Enforce.tagByGroup]] tags them by the already-partitioned group
-    * key. That tagged frame is the ONE pin (`graft.Caches`): `ok` is
-    * its clean groups and `dead` its first row per group, so writing
-    * `ok` then `dead` reads each staged file once, and neither adds an
-    * exchange or a join. (A second pin between the shuffle and the
-    * tag would cost one: a cached adaptive plan reports no output
-    * partitioning.) Building the frames runs no Spark job; both are
-    * valid until `Caches.releaseAll`. */
+    * key. `ok` is that tagged frame's clean groups and `dead` its first
+    * row per group; neither adds an exchange or a join, and nothing is
+    * pinned. Writing `ok` then `dead` through `Sinks` runs ONE Spark
+    * action, like the reference's tagged outputs: `ok` is written as an
+    * observed twin ([[writeOk]]) that gathers the dead-letter lines in
+    * the same pass, and `dead` is written from those lines with no
+    * Spark job. Both frames stay self-sufficient lazy frames: any other
+    * action, in any order, recomputes from the staged text (a `dead`
+    * written first is collected). The observed lines live until
+    * `Caches.releaseAll` (or the enclosing `Caches.scoped` block ends),
+    * the lifetime of a pin. Building the frames runs no Spark job. */
   def pipeline(spark: SparkSession, root: String, apiName: String): (DataFrame, DataFrame) = {
     val api = normalizer(apiName)
     // A glob matching NO files is an empty input, not a PATH_NOT_FOUND
@@ -268,7 +277,7 @@ object Normalize {
     // corrupt groups are quarantined BEFORE enforcement so their rows
     // reach neither output; `pos` is null exactly on a group's
     // placeholder row (no pairs), 0 on its first pair
-    val tagged = graft.Caches.pin(Enforce.tagByGroup(
+    val v = new Verdicts(Enforce.tagByGroup(
       groups
         .select(col("pk"), col("files"), col("corrupt"), posexplode_outer(
           when(!col("corrupt"), api.join(col("teams"), col("standings"))))
@@ -276,16 +285,66 @@ object Normalize {
         .select(col("pk"), col("files"), col("corrupt"), col("pos"), col("p.*"))
         .select(api.row ++ Seq(col("files"), col("corrupt"), col("pos")): _*),
       SchemaRegistry.v1.fields, "_group_pk"))
-
-    val ok = Enforce.okGroups(tagged.filter(col("pos").isNotNull), SchemaRegistry.v1.fields)
-    val dead = tagged.filter(coalesce(col("pos"), lit(0)) === 0)
-      .select(col("_group_pk").as("pk"),
-        when(col("corrupt"), lit("corrupt_input"))
-          .when(col("pos").isNull, lit("empty_or_unjoinable_group"))
-          .when(col("group_error").isNotNull, lit("enforcement_failure"))
-          .as("error"),
-        col("files"))
-      .filter(col("error").isNotNull)
-    (ok, dead)
+    live.put(v.ok, v)
+    live.put(v.dead, v)
+    graft.Caches.hold { () => live.remove(v.ok); live.remove(v.dead) }
+    (v.ok, v.dead)
   }
+
+  /** The group verdicts of one [[pipeline]] call: its `ok` and `dead`
+    * frames over one tagged frame, plus the dead-letter lines observed
+    * by the last write of `ok` that returned. */
+  private final class Verdicts(tagged: DataFrame) {
+    private val first = coalesce(col("pos"), lit(0)) === 0
+    private val error = when(col("corrupt"), lit("corrupt_input"))
+      .when(col("pos").isNull, lit("empty_or_unjoinable_group"))
+      .when(col("group_error").isNotNull, lit("enforcement_failure"))
+    private def okRows(t: DataFrame): DataFrame =
+      Enforce.okGroups(t.filter(col("pos").isNotNull), SchemaRegistry.v1.fields)
+
+    val ok: DataFrame = okRows(tagged)
+    val dead: DataFrame = tagged.filter(first)
+      .select(col("_group_pk").as("pk"), error.as("error"), col("files"))
+      .filter(col("error").isNotNull)
+    // `Enforce.deadLetterJson(dead, "pk")`'s line on the row `dead`
+    // keeps for a failed group, null on every other row
+    private val line = when(first && error.isNotNull,
+      to_json(struct(col("_group_pk").as("PK"), col("files"), error.as("error"))))
+    @volatile private var observed: Option[Observation] = None
+
+    def writeOk(write: DataFrame => Unit): Unit = {
+      val o = Observation()
+      write(okRows(tagged.observe(o, collect_list(line).as("lines"))))
+      observed = Some(o)
+    }
+
+    // the listener bus completes the observation just after the write
+    // returns; Spark completes it with an empty row when the metric was
+    // planned away, which reads as none
+    def deadLetters: Option[Seq[String]] = observed.flatMap { o =>
+      scala.util.Try(Await.result(o.future, 30.seconds)).toOption
+        .filter(_.length > 0).map(_.getSeq[String](0))
+    }
+  }
+
+  // identity keys: a frame derived from `ok` or `dead` is a plain frame
+  private val live = Collections.synchronizedMap(new IdentityHashMap[DataFrame, Verdicts]())
+
+  /** Run `write` on `df`; a [[pipeline]] `ok` is handed over as its
+    * observed twin instead — the same rows from a plan created here,
+    * whose `CollectMetrics` node between the tagged rows and the ok
+    * filter gathers every failed group's dead-letter line in the same
+    * pass. `write` must run one complete action (a sink write): a
+    * partial action never sees the twin. */
+  private[engine] def writeOk(df: DataFrame)(write: DataFrame => Unit): Unit =
+    Option(live.get(df)).filter(_.ok eq df) match {
+      case Some(v) => v.writeOk(write)
+      case None => write(df)
+    }
+
+  /** For a [[pipeline]] `dead` keyed by `pk`: its dead-letter lines
+    * (`Enforce.deadLetterJson`'s), as observed by the last write of its
+    * `ok` that completed. None when no such write ran since the call. */
+  private[engine] def observedDeadLetters(df: DataFrame, pkCol: String): Option[Seq[String]] =
+    Option(live.get(df)).filter(v => (v.dead eq df) && pkCol == "pk").flatMap(_.deadLetters)
 }

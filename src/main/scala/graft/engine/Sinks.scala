@@ -1,7 +1,13 @@
 package graft.engine
 
-import org.apache.spark.sql.DataFrame
+import java.nio.charset.StandardCharsets.UTF_8
+
+import org.apache.hadoop.fs.Path
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.streaming.checkpointing.CheckpointFileManager
 import org.apache.spark.sql.functions._
+
+import graft.functions.RunConstant
 
 /** Sinks — SURVEY.md §2.2.
   *
@@ -10,33 +16,73 @@ import org.apache.spark.sql.functions._
   * table → `SaveMode.Overwrite` parquet, one subdir per api source.
   *
   * K2: failed groups go to a single-shard JSON-lines dead-letter file
-  * (`pipeline.py:57-63`).
+  * (`pipeline.py:57-63`), one line per failed GROUP, not per row. The
+  * reference feeds both sinks from one GroupByKey pass; here a
+  * `Normalize.pipeline` `ok` handed to a K1 sink is written as an
+  * observed twin that gathers its dead-letter lines in the same pass,
+  * so the K2 write that follows runs no Spark job.
   *
   * Scale: the unified sink optionally partitions by a low-cardinality
-  * key (e.g. season) so downstream reads prune partitions; the
-  * dead-letter coalesce(1) mirrors the reference's num_shards=1 and is
-  * safe because dead letters are a trickle — never coalesce the main
-  * output.
+  * key (e.g. season) so downstream reads prune partitions. Dead letters
+  * pass through the driver and one writer, as the reference's
+  * num_shards=1 funnels them through one shard — safe because they are
+  * a trickle (one line per failed group); never route the main output
+  * that way.
   */
 object Sinks {
 
+  // the write's instant, read by generated code rather than inlined in
+  // it, so a warm write compiles nothing (ref v1.json's
+  // CURRENT_TIMESTAMP() column default)
+  private def stamped(df: DataFrame): DataFrame =
+    df.withColumn("update_timestamp", coalesce(col("update_timestamp"), RunConstant.now()))
+
   /** K1 — WRITE_TRUNCATE ≡ overwrite; `update_timestamp` defaulted at
-    * the sink (ref v1.json's CURRENT_TIMESTAMP() column default). */
+    * the sink. */
   def writeUnified(df: DataFrame, outDir: String, apiName: String,
-      partitionBySeason: Boolean = false): Unit = {
-    val stamped = df.withColumn("update_timestamp",
-      coalesce(col("update_timestamp"), current_timestamp()))
-    val w = stamped.write.mode("overwrite")
-    (if (partitionBySeason) w.partitionBy("season") else w)
-      .parquet(s"$outDir/teams_$apiName")
+      partitionBySeason: Boolean = false): Unit =
+    Normalize.writeOk(df) { ok =>
+      val w = stamped(ok).write.mode("overwrite")
+      (if (partitionBySeason) w.partitionBy("season") else w)
+        .parquet(s"$outDir/teams_$apiName")
+    }
+
+  /** K2 — dead-letter JSON lines as one `part-00000.json`, written from
+    * the driver (ref num_shards=1): the lines a K1 write of the same
+    * `Normalize.pipeline` call observed, else `dead` collected. The
+    * file replaces the directory's content atomically. */
+  def writeDeadLetter(dead: DataFrame, pkCol: String, deadLetterDir: String): Unit = {
+    val lines = Normalize.observedDeadLetters(dead, pkCol).getOrElse(
+      Enforce.deadLetterJson(dead, pkCol).collect().map(_.getString(0)).toSeq)
+    commitLines(dead.sparkSession, new Path(deadLetterDir), "part-00000.json",
+      lines.sorted.iterator.map(_.getBytes(UTF_8)))
   }
 
-  /** K2 — dead-letter JSON-lines, single shard (ref num_shards=1). */
-  def writeDeadLetter(dead: DataFrame, pkCol: String, deadLetterDir: String): Unit =
-    Enforce.deadLetterJson(dead, pkCol)
-      .coalesce(1)
-      .write.mode("overwrite")
-      .text(deadLetterDir)
+  /** Spark's hidden-file rule for file sources (`HadoopFSUtils.
+    * shouldFilterOutPathName` plus the file index's data-path check):
+    * `_`/`.` prefixes (a `_` name holding `=` is a partition value)
+    * and in-flight `._COPYING_` copies. */
+  private[graft] def visible(name: String): Boolean =
+    !((name.startsWith("_") && !name.contains("=")) || name.startsWith(".") ||
+      name.endsWith("._COPYING_"))
+
+  /** Replace `dir`'s visible content with one file `name` of `lines`,
+    * each newline-terminated, written from the driver through
+    * `CheckpointFileManager.createAtomic`: a write that dies leaves only
+    * a hidden temp file, so `dir` reads as before. Every other visible
+    * entry of `dir` is deleted after the file lands. */
+  private[graft] def commitLines(spark: SparkSession, dir: Path, name: String,
+      lines: Iterator[Array[Byte]]): Unit = {
+    val fm = CheckpointFileManager.create(dir, spark.sessionState.newHadoopConf())
+    fm.mkdirs(dir)
+    val out = fm.createAtomic(new Path(dir, name), overwriteIfPossible = true)
+    try {
+      lines.foreach { l => out.write(l); out.write('\n') }
+      out.close()
+    } catch { case e: Throwable => out.cancel(); throw e }
+    fm.list(dir).map(_.getPath)
+      .filter(p => visible(p.getName) && p.getName != name).foreach(fm.delete)
+  }
 
   /** K1, repaired: per-GROUP truncate instead of per-TABLE. The
     * reference's WRITE_TRUNCATE replaces the WHOLE table each run, so
@@ -50,25 +96,26 @@ object Sinks {
     * touches its partitions, never the table. The overwrite mode is a
     * per-write option, so the session conf is never touched. */
   def writeUnifiedUpsert(df: DataFrame, outDir: String, apiName: String): Unit =
-    // null league_id rows would all land in one Hive default
-    // partition that successive runs for DIFFERENT leagues would
-    // clobber; routing them to an explicit pseudo-league keeps the
-    // per-league-truncate contract well-defined (the __unknown__
-    // bucket is one "league" whose runs replace each other)
-    df.withColumn("update_timestamp",
-        coalesce(col("update_timestamp"), current_timestamp()))
-      .withColumn("league_id", coalesce(col("league_id"), lit("__unknown__")))
-      .write.mode("overwrite")
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy("season", "league_id")
-      .parquet(s"$outDir/teams_$apiName")
+    Normalize.writeOk(df) { ok =>
+      // null league_id rows would all land in one Hive default
+      // partition that successive runs for DIFFERENT leagues would
+      // clobber; routing them to an explicit pseudo-league keeps the
+      // per-league-truncate contract well-defined (the __unknown__
+      // bucket is one "league" whose runs replace each other)
+      stamped(ok)
+        .withColumn("league_id", coalesce(col("league_id"), lit("__unknown__")))
+        .write.mode("overwrite")
+        .option("partitionOverwriteMode", "dynamic")
+        .partitionBy("season", "league_id")
+        .parquet(s"$outDir/teams_$apiName")
+    }
 
   /** Small-files compaction: rewrite a parquet dir to ~`targetFiles`
     * files. Streaming/micro-batched sinks accrete tiny files whose
     * per-file open cost eventually dominates scans; periodic
     * compaction is table maintenance 101 at scale. Writes to a temp
     * sibling then swaps, so a failed compaction never loses data. */
-  def compact(spark: org.apache.spark.sql.SparkSession, dir: String,
+  def compact(spark: SparkSession, dir: String,
       targetFiles: Int): Unit = {
     val tmp = dir + "__compacting"
     val fs = org.apache.hadoop.fs.FileSystem.get(

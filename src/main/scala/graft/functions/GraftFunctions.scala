@@ -8,7 +8,7 @@ import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
 /** SQL-surface registration for graft's custom expressions, so
   * `SELECT poly_hash(text)` works alongside the Column API.
   *
-  * `register(spark)` adds the functions to an existing session.
+  * `register(spark)` adds the missing ones to an existing session.
   * `GraftExtensions` installs them at session build time, together
   * with the as-of join's planner strategy and pushdown rule:
   * `GraftSession.builder` carries it, and a shared cluster deploys it
@@ -60,11 +60,15 @@ object GraftFunctions {
     "delta_varint_decode" -> arity("delta_varint_decode", Set(1))(exprs =>
       DeltaVarintDecode(exprs.head)))
 
-  def register(spark: SparkSession): Unit =
+  /** Adds each function the session does not have yet, so on a
+    * session built with `GraftExtensions` it replaces nothing. */
+  def register(spark: SparkSession): Unit = {
+    val registry = spark.sessionState.functionRegistry
     fns.foreach { case (name, builder) =>
-      spark.sessionState.functionRegistry
-        .createOrReplaceTempFunction(name, builder, "built-in")
+      if (!registry.functionExists(FunctionIdentifier(name)))
+        registry.createOrReplaceTempFunction(name, builder, "built-in")
     }
+  }
 
   private[functions] def install(e: SparkSessionExtensions): Unit = {
     fns.foreach { case (name, builder) =>

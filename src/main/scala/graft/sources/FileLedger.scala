@@ -3,8 +3,9 @@ package graft.sources
 import com.fasterxml.jackson.databind.ObjectMapper
 import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
-import org.apache.spark.sql.execution.streaming.checkpointing.CheckpointFileManager
 import org.apache.spark.sql.types.StructType
+
+import graft.engine.Sinks
 
 /** Exactly-once INCREMENTAL file ingestion over a growing staged tree —
   * the continuous-ingestion staple of a training-data pipeline (new
@@ -44,14 +45,6 @@ object FileLedger {
   private val RunDir = "run=(-?\\d+)".r
   private val Json = new ObjectMapper()
 
-  /** Spark's hidden-file rule for file sources (`HadoopFSUtils.
-    * shouldFilterOutPathName` plus the file index's data-path check):
-    * `_`/`.` prefixes (a `_` name holding `=` is a partition value)
-    * and in-flight `._COPYING_` copies. */
-  private def visible(name: String): Boolean =
-    !((name.startsWith("_") && !name.contains("=")) || name.startsWith(".") ||
-      name.endsWith("._COPYING_"))
-
   private def frame(spark: SparkSession, schema: StructType, rows: Seq[Row]): DataFrame =
     spark.createDataFrame(java.util.Arrays.asList(rows: _*), schema)
 
@@ -67,7 +60,7 @@ object FileLedger {
     val root = new Path(ledgerDir)
     val fs = fsOf(spark, root)
     def visibleIn(dir: Path): Seq[FileStatus] =
-      fs.listStatus(dir).toSeq.filter(s => visible(s.getPath.getName))
+      fs.listStatus(dir).toSeq.filter(s => Sinks.visible(s.getPath.getName))
     def paths(file: Path): List[String] = {
       val in = fs.open(file)
       try scala.io.Source.fromInputStream(in)(scala.io.Codec.UTF8).getLines()
@@ -97,7 +90,7 @@ object FileLedger {
     val fs = fsOf(spark, pattern)
     Option(fs.globStatus(pattern)).toSeq.flatten
       .flatMap(s => if (s.isDirectory) fs.listStatus(s.getPath).toSeq.filter(_.isFile) else Seq(s))
-      .filter(s => visible(s.getPath.getName) && s.getLen > 0)
+      .filter(s => Sinks.visible(s.getPath.getName) && s.getLen > 0)
       .map(s => fs.makeQualified(s.getPath).toString -> s.getLen)
   }
 
@@ -125,19 +118,8 @@ object FileLedger {
   def commit(spark: SparkSession, files: DataFrame, ledgerDir: String,
       runId: Long): Unit = {
     val paths = files.select("path").collect().map(_.getString(0))
-    val dir = new Path(s"$ledgerDir/run=$runId")
-    val fm = CheckpointFileManager.create(dir, spark.sessionState.newHadoopConf())
-    fm.mkdirs(dir)
-    val out = fm.createAtomic(new Path(dir, CommitFile), overwriteIfPossible = true)
-    try {
-      paths.foreach { p =>
-        out.write(Json.writeValueAsBytes(Json.createObjectNode().put("path", p)))
-        out.write('\n')
-      }
-      out.close()
-    } catch { case e: Throwable => out.cancel(); throw e }
     // whatever else a former commit of this run left is overwritten
-    fm.list(dir).map(_.getPath)
-      .filter(p => visible(p.getName) && p.getName != CommitFile).foreach(fm.delete)
+    Sinks.commitLines(spark, new Path(s"$ledgerDir/run=$runId"), CommitFile,
+      paths.iterator.map(p => Json.writeValueAsBytes(Json.createObjectNode().put("path", p))))
   }
 }

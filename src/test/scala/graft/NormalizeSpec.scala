@@ -293,29 +293,144 @@ class NormalizeSpec extends SparkSpec {
     graft.Caches.releaseAll()
   }
 
-  test("writing ok then dead runs the staged text probe once: dead reads it from a loaded pin") {
-    import org.apache.spark.sql.execution.columnar.InMemoryRelation
-    import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
-    import org.apache.spark.sql.execution.datasources.text.TextFileFormat
+  // `body`'s result, the Spark jobs it submitted and the input records
+  // its tasks read (one per staged file for a whole-text scan)
+  private def jobsAndReads[A](tag: String)(body: => A): (A, Seq[String], Long) = {
+    val read = new java.util.concurrent.atomic.AtomicLong
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onTaskEnd(e: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit =
+        if (e.taskMetrics != null) read.addAndGet(e.taskMetrics.inputMetrics.recordsRead)
+    }
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      val (a, jobs) = PlanLint.constructionJobSites(spark, tag)(body)
+      (a, jobs, read.get)
+    } finally spark.sparkContext.removeSparkListener(listener)
+  }
+
+  private val mixedFiles = 13L
+
+  private def deadFile(dir: String): String = Files.readString(Path.of(dir, "part-00000.json"))
+
+  // the mixed root's dead-letter file, written by `write(ok, dead, out)`
+  private def mixedDeadFile(write: (org.apache.spark.sql.DataFrame,
+      org.apache.spark.sql.DataFrame, String) => Unit): String = {
     val (ok, dead) = Normalize.pipeline(spark, s"$mixedRoot/api", "apifootball")
-    // a text scan outside every pin would re-run the probe for that output
-    def unpinnedTextScans(df: org.apache.spark.sql.DataFrame) =
-      df.queryExecution.withCachedData.collect {
-        case l: LogicalRelation if (l.relation match {
-          case r: HadoopFsRelation => r.fileFormat.isInstanceOf[TextFileFormat]
-          case _ => false
-        }) => l
-      }
-    def pins(df: org.apache.spark.sql.DataFrame) =
-      df.queryExecution.withCachedData.collect { case r: InMemoryRelation => r }
-    assert(unpinnedTextScans(ok).isEmpty && unpinnedTextScans(dead).isEmpty)
-    assert(pins(dead).nonEmpty)
+    val out = Files.createTempDirectory("graft_dead_order").toString
+    write(ok, dead, out)
+    graft.Caches.releaseAll()
+    deadFile(s"$out/dead")
+  }
+
+  test("writing ok then dead scans the staged text once; the dead write runs no job") {
+    val (ok, dead) = Normalize.pipeline(spark, s"$mixedRoot/api", "apifootball")
     val out = Files.createTempDirectory("graft_once").toString
-    Sinks.writeUnified(ok, out, "apifootball")
-    // every pin `dead` reads was filled by the ok write
-    assert(pins(dead).forall(_.cacheBuilder.isCachedColumnBuffersLoaded))
-    Sinks.writeDeadLetter(dead, "pk", s"$out/dead")
+    val (_, _, okReads) = jobsAndReads("ok_write") { Sinks.writeUnified(ok, out, "apifootball") }
+    val (_, deadJobs, deadReads) = jobsAndReads("dead_write") {
+      Sinks.writeDeadLetter(dead, "pk", s"$out/dead")
+    }
+    assert(okReads == mixedFiles, s"the ok write read $okReads records")
+    assert(deadJobs.isEmpty && deadReads == 0L, deadJobs.mkString(","))
     assert(spark.read.text(s"$out/dead").count() == 5L)
+    graft.Caches.releaseAll()
+  }
+
+  test("dead-first and dead-only runs write the same dead-letter file as ok then dead") {
+    val okThenDead = mixedDeadFile { (ok, dead, out) =>
+      Sinks.writeUnified(ok, out, "apifootball"); Sinks.writeDeadLetter(dead, "pk", s"$out/dead")
+    }
+    val deadThenOk = mixedDeadFile { (ok, dead, out) =>
+      Sinks.writeDeadLetter(dead, "pk", s"$out/dead"); Sinks.writeUnified(ok, out, "apifootball")
+    }
+    val deadOnly = mixedDeadFile { (_, dead, out) => Sinks.writeDeadLetter(dead, "pk", s"$out/dead") }
+    assert(okThenDead.linesIterator.size == 5, okThenDead)
+    assert(deadThenOk == okThenDead && deadOnly == okThenDead, s"$okThenDead\n--\n$deadOnly")
+  }
+
+  test("partial actions on ok before the sinks do not truncate the dead letters") {
+    val deadOnly = mixedDeadFile { (_, dead, out) => Sinks.writeDeadLetter(dead, "pk", s"$out/dead") }
+    val afterPartial = mixedDeadFile { (ok, dead, out) =>
+      assert(ok.limit(1).collect().length == 1)
+      ok.show()
+      Sinks.writeUnified(ok, out, "apifootball")
+      Sinks.writeDeadLetter(dead, "pk", s"$out/dead")
+    }
+    assert(afterPartial == deadOnly, afterPartial)
+  }
+
+  test("after Caches.releaseAll the dead write recomputes and stays exact") {
+    val okThenDead = mixedDeadFile { (ok, dead, out) =>
+      Sinks.writeUnified(ok, out, "apifootball"); Sinks.writeDeadLetter(dead, "pk", s"$out/dead")
+    }
+    val afterRelease = mixedDeadFile { (ok, dead, out) =>
+      Sinks.writeUnified(ok, out, "apifootball")
+      graft.Caches.releaseAll()
+      val (_, jobs, _) = jobsAndReads("dead_after_release") {
+        Sinks.writeDeadLetter(dead, "pk", s"$out/dead")
+      }
+      assert(jobs.nonEmpty, "the released verdicts were reused")
+    }
+    assert(afterRelease == okThenDead, afterRelease)
+  }
+
+  test("a dead-letter commit interrupted mid-write leaves the previous file readable") {
+    val (_, dead) = Normalize.pipeline(spark, s"$mixedRoot/api", "apifootball")
+    val dir = Files.createTempDirectory("graft_dl_torn").toString + "/dl"
+    Sinks.writeDeadLetter(dead, "pk", dir)
+    val before = deadFile(dir)
+    val torn = Iterator("""{"PK":"torn"}""".getBytes("UTF-8")) ++
+      Iterator.single(()).map[Array[Byte]](_ => throw new RuntimeException("writer died"))
+    intercept[RuntimeException] {
+      Sinks.commitLines(spark, new org.apache.hadoop.fs.Path(dir), "part-00000.json", torn)
+    }
+    val visible = Files.list(Path.of(dir)).toArray.map(_.toString.split('/').last)
+      .filterNot(n => n.startsWith(".") || n.startsWith("_"))
+    assert(visible.toSeq == Seq("part-00000.json"), visible.mkString(", "))
+    assert(deadFile(dir) == before)
+    assert(spark.read.text(dir).count() == 5L)
+    graft.Caches.releaseAll()
+  }
+
+  test("a staged root with no files writes no ok rows and an empty dead-letter file") {
+    val root = Files.createTempDirectory("graft_empty_root").toString
+    val (ok, dead) = Normalize.pipeline(spark, s"$root/api", "apifootball")
+    val out = Files.createTempDirectory("graft_empty_out").toString
+    Sinks.writeUnified(ok, out, "apifootball")
+    Sinks.writeDeadLetter(dead, "pk", s"$out/dead")
+    assert(spark.read.parquet(s"$out/teams_apifootball").count() == 0L)
+    assert(deadFile(s"$out/dead").isEmpty)
+    graft.Caches.releaseAll()
+  }
+
+  test("a warm upsert compiles no new classes and stamps every row") {
+    import org.apache.spark.metrics.source.CodegenMetrics
+    val out = Files.createTempDirectory("graft_warm_upsert").toString
+    def day(): Unit = {
+      val (ok, dead) = Normalize.pipeline(spark, s"$mixedRoot/api", "apifootball")
+      Sinks.writeUnifiedUpsert(ok, out, "apifootball")
+      Sinks.writeDeadLetter(dead, "pk", s"$out/dead")
+      graft.Caches.releaseAll()
+    }
+    day()
+    val classes = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+    day()
+    assert(CodegenMetrics.METRIC_COMPILATION_TIME.getCount - classes == 0L)
+    val back = spark.read.parquet(s"$out/teams_apifootball")
+    assert(back.count() == 1L && back.filter(col("update_timestamp").isNull).count() == 0L)
+  }
+
+  test("an ETL day's sinks: the upsert submits at most 2 Spark jobs, the dead-letter write none") {
+    val (ok, dead) = Normalize.pipeline(spark, s"$mixedRoot/api", "apifootball")
+    val out = Files.createTempDirectory("graft_day_jobs").toString
+    val (_, upsert) = PlanLint.constructionJobSites(spark, "day_upsert") {
+      Sinks.writeUnifiedUpsert(ok, s"$out/table", "apifootball")
+    }
+    val (_, deadLetters) = PlanLint.constructionJobSites(spark, "day_dead") {
+      Sinks.writeDeadLetter(dead, "pk", s"$out/dead")
+    }
+    // the shuffle by group key, then the write
+    assert(upsert.nonEmpty && upsert.size <= 2, upsert.mkString(","))
+    assert(deadLetters.isEmpty, deadLetters.mkString(","))
     graft.Caches.releaseAll()
   }
 

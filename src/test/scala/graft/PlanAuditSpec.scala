@@ -356,6 +356,31 @@ class PlanAuditSpec extends SparkSpec {
     assert(df.count() == q68(spark, sfDir).count())
   }
 
+  test("q86: ok and dead share one text scan per api through exchange reuse") {
+    import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan}
+    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+    import org.apache.spark.sql.execution.datasources.text.TextFileFormat
+    import org.apache.spark.sql.execution.exchange.ReusedExchangeExec
+    // a reused exchange reads the original's output: do not descend
+    def nodes(p: SparkPlan): Seq[SparkPlan] = p match {
+      case a: AdaptiveSparkPlanExec => nodes(a.executedPlan)
+      case q: QueryStageExec => q +: nodes(q.plan)
+      case r: ReusedExchangeExec => Seq(r)
+      case o => o +: o.children.flatMap(nodes)
+    }
+    graft.Caches.releaseAll()
+    val df = SparkEntry.queries("q86_parity_pipeline")(spark, sfDir)
+    df.collect()
+    val executed = nodes(df.queryExecution.executedPlan)
+    val textScans = executed.collect {
+      case s: FileSourceScanExec if s.relation.fileFormat.isInstanceOf[TextFileFormat] => s
+    }
+    val p = df.queryExecution.executedPlan.toString
+    assert(textScans.size == 2, s"expected one staged-text scan per api, got ${textScans.size}:\n$p")
+    assert(executed.exists(_.isInstanceOf[ReusedExchangeExec]), s"no exchange reused:\n$p")
+    graft.Caches.releaseAll()
+  }
+
   test("only GraftSession.scala calls the SparkSession builder") {
     import scala.jdk.CollectionConverters._
     val call = """SparkSession\s*\.\s*builder\b""".r.unanchored

@@ -203,6 +203,25 @@ class PolyHashSpec extends SparkSpec {
     assert(r == 97L * 961 + 98 * 31 + 99)
   }
 
+  test("register adds only missing functions: the extension's stay, a plain session gets all") {
+    import org.apache.spark.sql.catalyst.FunctionIdentifier
+    val names = Seq("poly_hash", "poly_hash_shingles", "token_shingle_hashes", "word_shingles",
+      "minhash_sig", "dot_product", "sorted_intersect_count", "simhash_fold", "cdc_chunks",
+      "winnow_positions", "delta_varint_encode", "delta_varint_decode").map(FunctionIdentifier(_))
+    val registry = spark.sessionState.functionRegistry
+    val installed = names.map(registry.lookupFunction(_))
+    assert(installed.forall(_.isDefined))
+    graft.functions.GraftFunctions.register(spark)
+    names.zip(installed).foreach { case (n, info) =>
+      assert(registry.lookupFunction(n).get eq info.get, s"$n was replaced")
+    }
+    val plain = org.apache.spark.sql.GraftExpressionBridge.plainSession(spark.sparkContext)
+    assert(names.forall(n => !plain.sessionState.functionRegistry.functionExists(n)))
+    graft.functions.GraftFunctions.register(plain)
+    assert(names.forall(plain.sessionState.functionRegistry.functionExists))
+    assert(plain.sql("SELECT poly_hash('abc') AS h").head().getLong(0) == 97L * 961 + 98 * 31 + 99)
+  }
+
   test("full custom-expression surface is SQL-callable") {
     graft.functions.GraftFunctions.register(spark)
     val row = spark.sql(
