@@ -28,6 +28,11 @@ import graft.functions.RunConstant
   * num_shards=1 funnels them through one shard — safe because they are
   * a trickle (one line per failed group); never route the main output
   * that way.
+  *
+  * Every write here goes through [[LocalFs.Overlay]], so on a local
+  * path it starts no operating-system process (no forked `chmod` per
+  * created file or directory, no `readlink` per rename); other schemes
+  * are unaffected.
   */
 object Sinks {
 
@@ -42,7 +47,7 @@ object Sinks {
   def writeUnified(df: DataFrame, outDir: String, apiName: String,
       partitionBySeason: Boolean = false): Unit =
     Normalize.writeOk(df) { ok =>
-      val w = stamped(ok).write.mode("overwrite")
+      val w = stamped(ok).write.mode("overwrite").options(LocalFs.Overlay)
       (if (partitionBySeason) w.partitionBy("season") else w)
         .parquet(s"$outDir/teams_$apiName")
     }
@@ -70,10 +75,13 @@ object Sinks {
     * each newline-terminated, written from the driver through
     * `CheckpointFileManager.createAtomic`: a write that dies leaves only
     * a hidden temp file, so `dir` reads as before. Every other visible
-    * entry of `dir` is deleted after the file lands. */
+    * entry of `dir` is deleted after the file lands. The default
+    * `FileContext`-based manager is kept for its atomic overwrite-rename
+    * (the `FileSystem`-based one's is best-effort: on HDFS it keeps the
+    * old file and raises nothing); only its conf carries the overlay. */
   private[graft] def commitLines(spark: SparkSession, dir: Path, name: String,
       lines: Iterator[Array[Byte]]): Unit = {
-    val fm = CheckpointFileManager.create(dir, spark.sessionState.newHadoopConf())
+    val fm = CheckpointFileManager.create(dir, LocalFs.hadoopConf(spark))
     fm.mkdirs(dir)
     val out = fm.createAtomic(new Path(dir, name), overwriteIfPossible = true)
     try {
@@ -106,6 +114,7 @@ object Sinks {
         .withColumn("league_id", coalesce(col("league_id"), lit("__unknown__")))
         .write.mode("overwrite")
         .option("partitionOverwriteMode", "dynamic")
+        .options(LocalFs.Overlay)
         .partitionBy("season", "league_id")
         .parquet(s"$outDir/teams_$apiName")
     }
@@ -114,21 +123,22 @@ object Sinks {
     * files. Streaming/micro-batched sinks accrete tiny files whose
     * per-file open cost eventually dominates scans; periodic
     * compaction is table maintenance 101 at scale. Writes to a temp
-    * sibling then swaps, so a failed compaction never loses data. */
+    * sibling then swaps, so a failed compaction never loses data. The
+    * swap runs on `dir`'s own file system under the session's Hadoop
+    * conf, so any scheme works and `spark.hadoop.*` settings apply. */
   def compact(spark: SparkSession, dir: String,
       targetFiles: Int): Unit = {
     val tmp = dir + "__compacting"
-    val fs = org.apache.hadoop.fs.FileSystem.get(
-      spark.sparkContext.hadoopConfiguration)
-    val dst = new org.apache.hadoop.fs.Path(dir)
-    val bak = new org.apache.hadoop.fs.Path(dir + "__old")
-    val tmpP = new org.apache.hadoop.fs.Path(tmp)
+    val dst = new Path(dir)
+    val fs = dst.getFileSystem(LocalFs.hadoopConf(spark))
+    val bak = new Path(dir + "__old")
+    val tmpP = new Path(tmp)
     // clear leftovers of a prior crashed compaction FIRST — a stale
     // __old would make rename(dst, bak) return false and turn the
     // swap into a silent no-op
     if (fs.exists(bak)) fs.delete(bak, true)
     spark.read.parquet(dir).repartition(targetFiles)
-      .write.mode("overwrite").parquet(tmp)
+      .write.mode("overwrite").options(LocalFs.Overlay).parquet(tmp)
     // Hadoop rename signals failure by RETURNING FALSE, not throwing;
     // every step must be checked or a half-failed swap would reach the
     // delete below and destroy the only remaining copy

@@ -68,10 +68,11 @@ object StagedJsonSource {
     * `sessionState.newHadoopConf()` so session-level `spark.hadoop.*`
     * settings (object-store credentials, fs tuning) apply on both the
     * driver listing and executor IO, which `new Configuration()`
-    * silently dropped. */
+    * silently dropped. [[graft.engine.LocalFs.Overlay]] sits on top, so
+    * the write's task files, `mkdirs` and commit renames on a local
+    * path start no process. */
   private[sources] def sessionConf(): SerializableConfiguration =
-    new SerializableConfiguration(
-      SparkSession.active.sessionState.newHadoopConf())
+    new SerializableConfiguration(graft.engine.LocalFs.hadoopConf(SparkSession.active))
 
   /** (season, league, endpoint) from a staged path; None = not a
     * staged file (ignored, like non-matching files in a file index). */

@@ -59,15 +59,14 @@ final class StagedJsonWrite(root: String, schema: StructType,
     val fs = rootPath.getFileSystem(conf.value)
     if (truncate && fs.exists(rootPath)) {
       // WRITE_TRUNCATE scoped to the LAYOUT's files: only staged .json
-      // files are deleted, never unrelated content under root
-      val it = fs.listFiles(rootPath, true)
-      val doomed = mutable.ArrayBuffer.empty[HPath]
-      while (it.hasNext) {
-        val f = it.next()
-        if (StagedJsonSource.parsePath(f.getPath.toUri.getPath).isDefined)
-          doomed += f.getPath
+      // files are deleted, never unrelated content under root. The walk
+      // uses listStatus, not listFiles: a LocatedFileStatus copies the
+      // permission, which the local file system reads by running `ls`.
+      def doomed(dir: HPath): Seq[HPath] = fs.listStatus(dir).toSeq.flatMap { s =>
+        if (s.isDirectory) doomed(s.getPath)
+        else Seq(s.getPath).filter(p => StagedJsonSource.parsePath(p.toUri.getPath).isDefined)
       }
-      graft.engine.ParFs(doomed.toSeq)(fs.delete(_, false))
+      graft.engine.ParFs(doomed(rootPath))(fs.delete(_, false))
     }
     // one rename per staged file, all to DISTINCT final paths (names
     // are a pure function of (partition, row seq)), so the commit loop
