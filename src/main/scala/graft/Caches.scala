@@ -1,6 +1,7 @@
 package graft
 
 import java.lang.ref.WeakReference
+import java.util.concurrent.ConcurrentLinkedQueue
 
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, Dataset}
@@ -23,10 +24,17 @@ import org.apache.spark.storage.StorageLevel
   *  2. when a caller is completely done with the results of the
   *     operators it invoked (bench harnesses between queries, a
   *     streaming micro-batch after its writes, tests in teardown), it
-  *     calls [[releaseAll]] — which drops exactly the library's
-  *     blocks and NOTHING else. A co-tenant's `df.cache()` in the
-  *     same SparkSession survives, which `spark.catalog.clearCache()`
+  *     releases them — which drops exactly the library's blocks and
+  *     NOTHING else. A co-tenant's `df.cache()` in the same
+  *     SparkSession survives, which `spark.catalog.clearCache()`
   *     (the old contract) could not promise.
+  *
+  * A pin has one of two lifetimes, each kept by one `Scope`: the
+  * session root, released by [[releaseAll]], or a thread's [[scoped]]
+  * block, released when the block exits. Driver-side memos that must
+  * not outlive a query (Similarity's codebooks, Normalize's observed
+  * dead letters) register an [[onRelease]] hook instead; hooks run at
+  * [[releaseAll]] only.
   *
   * After `releaseAll`, frames previously returned by graft operators
   * are invalid for further actions: persisted ones silently recompute
@@ -46,48 +54,48 @@ import org.apache.spark.storage.StorageLevel
   */
 object Caches {
 
-  private val pinnedDs =
-    new java.util.concurrent.ConcurrentLinkedQueue[Dataset[_]]()
-  private val pinnedRdds =
-    new java.util.concurrent.ConcurrentLinkedQueue[WeakReference[RDD[_]]]()
-  private val pinnedHolds =
-    new java.util.concurrent.ConcurrentLinkedQueue[() => Unit]()
-
-  /** A thread-local pin scope: while active on the CURRENT thread,
-    * pins/checkpoints register here instead of the global registry,
-    * and [[scoped]] releases exactly them on exit. Pins taken by
-    * OTHER threads during the block still go global — which is the
-    * point: two concurrent streams' micro-batches (each on its own
-    * foreachBatch thread) can no longer release each other's
-    * in-flight frames, the failure mode a global [[releaseAll]] at a
-    * batch boundary had (a concurrent BFS stream's checkpointed
-    * frontier is lineage-truncated — an external release kills its
-    * next action, not just its cache). */
+  /** One pin registry: the session root and every thread's [[scoped]]
+    * block are each a `Scope`. Pins and checkpoints register with the
+    * current thread's innermost scope, or with the root when none is
+    * active. Thread scopes are what let two concurrent streams'
+    * micro-batches (each on its own foreachBatch thread) release only
+    * their own in-flight frames: a global [[releaseAll]] at a batch
+    * boundary would also kill a concurrent BFS stream's checkpointed
+    * frontier, which is lineage-truncated, so an external release
+    * fails its next action rather than just dropping its cache. */
   private final class Scope {
-    val ds = new scala.collection.mutable.ArrayBuffer[Dataset[_]]()
-    val rdds = new scala.collection.mutable.ArrayBuffer[WeakReference[RDD[_]]]()
-    val holds = new scala.collection.mutable.ArrayBuffer[() => Unit]()
+    val ds = new ConcurrentLinkedQueue[Dataset[_]]()
+    val rdds = new ConcurrentLinkedQueue[WeakReference[RDD[_]]]()
+    /** Drains by `poll`, so a pin registered while the release runs
+      * is either dropped now or kept for the next release. */
     def release(): Unit = {
-      holds.foreach(_())
-      holds.clear()
-      ds.foreach(_.unpersist(blocking = false))
-      ds.clear()
-      rdds.foreach { ref =>
-        val r = ref.get()
-        if (r != null) r.unpersist(blocking = false)
-        ref.clear()
-      }
-      rdds.clear()
+      drain(ds)(_.unpersist(blocking = false))
+      drain(rdds)(unpersist)
     }
   }
+
+  private def drain[A](q: ConcurrentLinkedQueue[A])(f: A => Unit): Unit = {
+    var a = q.poll()
+    while (a != null) { f(a); a = q.poll() }
+  }
+
+  private def unpersist(ref: WeakReference[RDD[_]]): Unit = {
+    val r = ref.get()
+    if (r != null) r.unpersist(blocking = false)
+    ref.clear()
+  }
+
+  private val root = new Scope
   private val currentScope = new ThreadLocal[Scope]()
+  private def active: Scope = Option(currentScope.get).getOrElse(root)
 
   /** Run `f` with a pin scope on this thread and release ONLY the
-    * pins/checkpoints it registered. For callers with a hard
-    * done-boundary whose SparkSession may host other graft work
-    * concurrently — streaming micro-batches are the canonical case.
-    * Frames pinned inside are invalid for actions after the block
-    * (the [[releaseAll]] caveat, scoped). Nests: the inner scope
+    * pins/checkpoints it registered. Pins taken by OTHER threads
+    * during the block go to their own scope or the root. For callers
+    * with a hard done-boundary whose SparkSession may host other graft
+    * work concurrently — streaming micro-batches are the canonical
+    * case. Frames pinned inside are invalid for actions after the
+    * block (the [[releaseAll]] caveat, scoped). Nests: the inner scope
     * releases its own pins, the outer keeps its. */
   def scoped[T](f: => T): T = {
     val outer = currentScope.get()
@@ -104,17 +112,8 @@ object Caches {
   def pin[T](ds: Dataset[T],
       level: StorageLevel = StorageLevel.MEMORY_AND_DISK): Dataset[T] = {
     ds.persist(level)
-    val sc = currentScope.get()
-    if (sc != null) sc.ds += ds else pinnedDs.add(ds)
+    active.ds.add(ds)
     ds
-  }
-
-  /** Register driver-side state with a pin's lifetime: `release` runs
-    * once, at [[releaseAll]] or at the end of the active thread's
-    * [[scoped]] block (`Normalize.pipeline`'s observed dead letters). */
-  def hold(release: () => Unit): Unit = {
-    val sc = currentScope.get()
-    if (sc != null) sc.holds += release else pinnedHolds.add(release)
   }
 
   /** `localCheckpoint` whose storage blocks the registry can actually
@@ -125,24 +124,17 @@ object Caches {
     * checkpoint alone — loop operators release round k's blocks as
     * soon as round k+1 is materialized, bounding the loop's storage
     * at two rounds instead of all of them. The thunk is idempotent;
-    * [[releaseAll]] also covers these blocks. */
+    * [[releaseAll]] (or the active [[scoped]] block) also covers these
+    * blocks. */
   def checkpoint(df: DataFrame, eager: Boolean = true)
       : (DataFrame, () => Unit) = synchronized {
     val sc = df.sparkSession.sparkContext
     val before = sc.getPersistentRDDs.keySet
     val out = df.localCheckpoint(eager)
-    val added = sc.getPersistentRDDs
-      .collect { case (k, r) if !before.contains(k) => r }.toList
-    val refs = added.map(new WeakReference[RDD[_]](_))
-    val scope = currentScope.get()
-    if (scope != null) refs.foreach(scope.rdds += _)
-    else refs.foreach(pinnedRdds.add)
-    val release: () => Unit = () => refs.foreach { ref =>
-      val r = ref.get()
-      if (r != null) r.unpersist(blocking = false)
-      ref.clear()
-    }
-    (out, release)
+    val refs = sc.getPersistentRDDs
+      .collect { case (k, r) if !before.contains(k) => new WeakReference[RDD[_]](r) }.toList
+    refs.foreach(active.rdds.add)
+    (out, () => refs.foreach(unpersist))
   }
 
   /** Run `f` with adaptive query execution DISABLED on `spark` — the
@@ -182,12 +174,8 @@ object Caches {
     * concurrent same-session use is ever supported, this must become
     * a per-query scope (SQLConf.withExistingConf / a cloned session)
     * rather than a set/restore on the shared conf. */
-  def staticLoopPlans[T](spark: org.apache.spark.sql.SparkSession)(f: => T): T = {
-    val k = "spark.sql.adaptive.enabled"
-    val prev = spark.conf.get(k)
-    spark.conf.set(k, "false")
-    try f finally spark.conf.set(k, prev)
-  }
+  def staticLoopPlans[T](spark: org.apache.spark.sql.SparkSession)(f: => T): T =
+    withConf(spark, "spark.sql.adaptive.enabled", _ => "false")(f)
 
   /** Scale-adaptive ROUND WIDTH for iterative loop operators (r21,
     * guide §2.2 "size shuffle partitions to the data" / §2 "derive
@@ -211,12 +199,17 @@ object Caches {
     * contract as [[staticLoopPlans]] (one logical query per session
     * at a time). Results are width-independent (the GRAFT_TEST_SHUFFLE
     * sweep class pins that). */
-  def loopWidth[T](spark: org.apache.spark.sql.SparkSession, rows: Long)(f: => T): T = {
-    val k = "spark.sql.shuffle.partitions"
-    val prev = spark.conf.get(k)
-    val w = math.min(prev.toLong, math.max(2L, rows / 65536L))
-    spark.conf.set(k, w.toString)
-    try f finally spark.conf.set(k, prev)
+  def loopWidth[T](spark: org.apache.spark.sql.SparkSession, rows: Long)(f: => T): T =
+    withConf(spark, "spark.sql.shuffle.partitions",
+      prev => math.min(prev.toLong, math.max(2L, rows / 65536L)).toString)(f)
+
+  /** Set `key` on `spark`'s session conf to `next` of its current
+    * value for the duration of `f`, and always restore it. */
+  private def withConf[T](spark: org.apache.spark.sql.SparkSession, key: String,
+      next: String => String)(f: => T): T = {
+    val prev = spark.conf.get(key)
+    spark.conf.set(key, next(prev))
+    try f finally spark.conf.set(key, prev)
   }
 
   /** Query-boundary invalidation hooks (r20): operator-layer memos
@@ -236,21 +229,6 @@ object Caches {
     * and only those. See the class doc for when this is safe. */
   def releaseAll(): Unit = {
     releaseHooks.forEach(_.run())
-    var hold = pinnedHolds.poll()
-    while (hold != null) {
-      hold()
-      hold = pinnedHolds.poll()
-    }
-    var ds = pinnedDs.poll()
-    while (ds != null) {
-      ds.unpersist(blocking = false)
-      ds = pinnedDs.poll()
-    }
-    var rddRef = pinnedRdds.poll()
-    while (rddRef != null) {
-      val r = rddRef.get()
-      if (r != null) r.unpersist(blocking = false)
-      rddRef = pinnedRdds.poll()
-    }
+    root.release()
   }
 }

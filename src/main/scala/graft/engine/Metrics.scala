@@ -2,7 +2,6 @@ package graft.engine
 
 import scala.collection.concurrent.TrieMap
 
-import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.execution.QueryExecution
 import org.apache.spark.sql.util.QueryExecutionListener
 
@@ -11,7 +10,7 @@ import org.apache.spark.sql.util.QueryExecutionListener
   * §2.7 O5: etl-stage/event/reason/run_id fields, `gcp_utils.py:11-18`,
   * `gcp.py:57-61`).
   *
-  * Design: `observe(...)` attaches aggregates that are computed DURING
+  * Design: `Dataset.observe(...)` attaches aggregates that are computed DURING
   * the action inside the same pass (a `CollectMetrics` node) — row
   * counts, null counts, dead-letter counts cost ZERO extra scans,
   * which is the only acceptable price at 100 TB (a separate
@@ -21,10 +20,6 @@ import org.apache.spark.sql.util.QueryExecutionListener
   * reference.
   */
 object Metrics {
-
-  /** Attach named observed metrics to a frame (computed in-pass). */
-  def observed(df: DataFrame, name: String, first: Column, rest: Column*): DataFrame =
-    df.observe(name, first, rest: _*)
 
   /** JSON-lines listener over observed metrics. `sink` receives one
     * line per completed action that carried observations (driver-side

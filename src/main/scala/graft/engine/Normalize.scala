@@ -230,8 +230,9 @@ object Normalize {
     * Spark job. Both frames stay self-sufficient lazy frames: any other
     * action, in any order, recomputes from the staged text (a `dead`
     * written first is collected). The observed lines live until
-    * `Caches.releaseAll` (or the enclosing `Caches.scoped` block ends),
-    * the lifetime of a pin. Building the frames runs no Spark job. */
+    * `Caches.releaseAll`, the lifetime of a root pin; the exit of a
+    * `Caches.scoped` block does not end them (no caller runs this
+    * inside one). Building the frames runs no Spark job. */
   def pipeline(spark: SparkSession, root: String, apiName: String): (DataFrame, DataFrame) = {
     val api = normalizer(apiName)
     // A glob matching NO files is an empty input, not a PATH_NOT_FOUND
@@ -287,7 +288,6 @@ object Normalize {
       SchemaRegistry.v1.fields, "_group_pk"))
     live.put(v.ok, v)
     live.put(v.dead, v)
-    graft.Caches.hold { () => live.remove(v.ok); live.remove(v.dead) }
     (v.ok, v.dead)
   }
 
@@ -329,6 +329,7 @@ object Normalize {
 
   // identity keys: a frame derived from `ok` or `dead` is a plain frame
   private val live = Collections.synchronizedMap(new IdentityHashMap[DataFrame, Verdicts]())
+  graft.Caches.onRelease(() => live.clear())
 
   /** Run `write` on `df`; a [[pipeline]] `ok` is handed over as its
     * observed twin instead — the same rows from a plan created here,

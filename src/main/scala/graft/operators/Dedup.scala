@@ -243,36 +243,6 @@ object Dedup {
       .distinct()
   }
 
-  /** Exact n-gram Jaccard verification of candidate pairs over a
-    * prepared (doc_id, s) shingle frame: join the shingle sets back and
-    * compute |∩|/|∪| precisely. Only candidates pay the
-    * set-intersection cost.
-    *
-    * Two exactness-preserving optimizations (the result set is
-    * identical, only non-qualifying pairs are skipped / the same
-    * number is computed differently):
-    *  - size-ratio prefilter: J(A,B) ≤ min(|A|,|B|)/max(|A|,|B|), so
-    *    pairs failing that bound can't reach the threshold — drops
-    *    them before any set intersection;
-    *  - |A∪B| = |A|+|B|−|A∩B| for distinct arrays: one intersect per
-    *    pair instead of intersect + union (halves the dominant cost).
-    */
-  def verifyJaccardOnShingles(sh: DataFrame, candidates: DataFrame,
-      threshold: Double): DataFrame =
-    verifyJaccardWith(sh, candidates, threshold,
-      (x, y) => size(array_intersect(x, y)).cast("long"))
-
-  /** Same contract over SORTED DISTINCT hashed shingle sets: the
-    * per-pair intersection is the allocation-free native merge scan
-    * (SortedIntersectCount) instead of ArrayIntersect's per-pair hash
-    * set — the difference between O(pairs·set) with and without a
-    * per-pair allocation+hashing constant. Inputs MUST be
-    * array_sort(array_distinct(...))-shaped. */
-  def verifyJaccardOnSortedHashes(sh: DataFrame, candidates: DataFrame,
-      threshold: Double): DataFrame =
-    verifyJaccardWith(sh, candidates, threshold,
-      graft.functions.SortedIntersectCount.sortedIntersectCount)
-
   /** The sorted-distinct hashed shingle sets (doc_id, s) — ONE home
     * for the repartition-before-kernel rule (line: a compact parquet
     * scan arrives in few partitions and would otherwise pin the
@@ -284,8 +254,26 @@ object Dedup {
       .select(col("doc_id"), array_sort(array_distinct(col("h"))).as("s"))
       .transform(d => graft.Caches.pin(d))
 
-  private def verifyJaccardWith(sh: DataFrame, candidates: DataFrame,
-      threshold: Double, intersectCount: (Column, Column) => Column): DataFrame = {
+  /** Exact n-gram Jaccard verification of candidate pairs over a
+    * prepared (doc_id, s) frame of SORTED DISTINCT hashed shingle sets:
+    * join the sets back and compute |∩|/|∪| precisely. Only candidates
+    * pay the set-intersection cost. Inputs MUST be
+    * array_sort(array_distinct(...))-shaped.
+    *
+    * Three exactness-preserving optimizations (the result set is
+    * identical, only non-qualifying pairs are skipped / the same
+    * number is computed differently):
+    *  - size-ratio prefilter: J(A,B) ≤ min(|A|,|B|)/max(|A|,|B|), so
+    *    pairs failing that bound can't reach the threshold — drops
+    *    them before any set intersection;
+    *  - |A∪B| = |A|+|B|−|A∩B| for distinct arrays: one intersect per
+    *    pair instead of intersect + union (halves the dominant cost);
+    *  - the per-pair intersection is the allocation-free native merge
+    *    scan (SortedIntersectCount) instead of ArrayIntersect's
+    *    per-pair hash set.
+    */
+  def verifyJaccardOnSortedHashes(sh: DataFrame, candidates: DataFrame,
+      threshold: Double): DataFrame = {
     // size prefilter on LIGHT (id, size) projections first: a pair
     // whose size ratio is below the threshold cannot reach it
     // (J ≤ min/max), so it must never pay the wide shingle-array
@@ -306,7 +294,8 @@ object Dedup {
     // inlined-expensive-filter lint class)
     survivors.join(sa, "a").join(sb, "b")
       .withColumn("ni",
-        graft.functions.ComputeOnce.once(intersectCount(col("sa"), col("sb"))))
+        graft.functions.ComputeOnce.once(
+          graft.functions.SortedIntersectCount.sortedIntersectCount(col("sa"), col("sb"))))
       .withColumn("jaccard",
         col("ni").cast("double") / (col("na") + col("nb") - col("ni")))
       .filter(col("jaccard") >= threshold)

@@ -88,7 +88,7 @@ class EnforceSpec extends SparkSpec {
     spark.listenerManager.register(listener)
     try {
       val annotated = Enforce.withError(raw, schema)
-      val observed = graft.engine.Metrics.observed(annotated, "enforce_metrics",
+      val observed = annotated.observe("enforce_metrics",
         count(lit(1)).as("n_rows"),
         count(col("error")).as("n_dead"))
       observed.collect()
