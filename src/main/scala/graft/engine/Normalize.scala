@@ -7,31 +7,34 @@ import scala.concurrent.duration._
 
 import org.apache.spark.sql.{Column, DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{ArrayType, DataType}
+import org.apache.spark.sql.types.{ArrayType, DataType, StructType}
+
+import graft.functions.ComputeOnce
+import graft.sources.{FileLedger, GroupedRead}
 
 /** Per-source normalizers: nested API-shaped JSON → the unified
   * team-season schema (SURVEY.md §2.3 P2-P8, §2.5 J1/J2; reference
   * `transforms.py:19-132`).
   *
   * Spark-first form of the reference's per-group DoFn
-  * (`pipeline.py:37-43` GroupByKey → `transforms.py:149-184` loop):
-  * every staged file is read ONCE as whole text, keyed by its group
-  * (`pk`, recovered from the file path — §2.3 P1), and ONE shuffle by
-  * `pk` places each (season, league) group's files together. One
-  * aggregate row per group then carries the group's file list, its
-  * corrupt flag and the parsed latest teams/standings documents, and
-  * the per-group build-dict/probe hash join (`transforms.py:32-37,
-  * 89-94`) runs INSIDE that row: a higher-order `filter` of the teams
-  * array per standings row, then `explode`. Semantics are the
-  * reference's inner join (probe misses drop, duplicate keys multiply,
-  * null keys never match — ref P9).
+  * (`pipeline.py:37-43` GroupByKey → `transforms.py:149-184` loop): the
+  * group key (`pk`, §2.3 P1) is already in every staged path, so the
+  * driver groups the listed files by it and each (season, league)
+  * group's files are read whole into ONE row ([[graft.sources.
+  * GroupedRead]]) — no shuffle. That row then carries everything the
+  * DoFn computes: the group's file list, its corrupt flag, the parsed
+  * latest teams/standings documents, the per-group build-dict/probe
+  * hash join (`transforms.py:32-37, 89-94`) as a higher-order `filter`
+  * of the teams array per standings row, the unified rows and the
+  * group verdict. Join semantics are the reference's inner join (probe
+  * misses drop, duplicate keys multiply, null keys never match — ref
+  * P9).
   *
   * Scale: a group is one league-season — tens of teams, a handful of
-  * files — so its in-row join is bounded no matter how many groups
-  * the staged root holds; the corpus scales in the NUMBER of groups,
-  * which the single hash(`pk`) exchange distributes. Everything
-  * downstream (the group verdict window, both outputs) keeps that
-  * partitioning and adds no exchange of its own.
+  * files — so its in-row work is bounded no matter how many groups the
+  * staged root holds; the corpus scales in the NUMBER of groups, which
+  * the read spreads over tasks. Nothing downstream adds an exchange,
+  * an aggregation or a window.
   */
 object Normalize {
 
@@ -47,9 +50,8 @@ object Normalize {
     *  - `join(teams, standings)`: the group's join, computed inside the
     *    group row over the parsed elements of its latest documents; an
     *    array of one struct per matched (standing, team) pair;
-    *  - `row`: the unified columns of one pair, read from the group key
-    *    `pk` and the pair's fields, plus the true group key as
-    *    `_group_pk`.
+    *  - `row(pk, pair)`: the unified columns of one pair, read from the
+    *    group key `pk` and the pair's fields.
     *
     * A fixed schema, not inference, so one group's payload cannot
     * change how another group's fields parse: a field whose value does
@@ -57,7 +59,7 @@ object Normalize {
     * JSON results), absent fields are null like the reference's dict
     * `.get` chains, and enforcement sees the rest unchanged. */
   final case class Api(teams: String, standings: String,
-      join: (Column, Column) => Column, row: Seq[Column]) {
+      join: (Column, Column) => Column, row: (Column, Column) => Seq[Column]) {
     def teamsType: DataType = ArrayType(DataType.fromDDL(teams))
     def standingsType: DataType = ArrayType(DataType.fromDDL(standings))
   }
@@ -84,23 +86,19 @@ object Normalize {
       "overall_league_form:string>",
     (teams, standings) => pairs(standings, teams)(
       (s, t) => t("team_key") === s("team_id"), (s, t) => struct(s.as("s"), t.as("t"))),
-    Seq(
-      // the TRUE group key rides along (pruned by enforcement):
-      // re-deriving it from the row pk is lossy when team_id itself
-      // contains a '-'
-      col("pk").as("_group_pk"),
-      concat_ws("-", col("pk"), col("s.team_id")).as("pk"),
-      col("s.team_id").as("team_id"),
-      col("s.team_name").as("team_name"),
-      col("t.team_country").as("team_country"),
-      col("s.league_id").as("league_id"),
-      col("s.league_name").as("league_name"),
+    (pk, p) => Seq(
+      concat_ws("-", pk, p("s")("team_id")).as("pk"),
+      p("s")("team_id").as("team_id"),
+      p("s")("team_name").as("team_name"),
+      p("t")("team_country").as("team_country"),
+      p("s")("league_id").as("league_id"),
+      p("s")("league_name").as("league_name"),
       // season stays a STRING here for the same reason as the other
       // numerics below: the running reference int()s it
       // (transforms.py:55 + helpers.py:92-100), so the 'unknown'
       // path-pk fallback must FAIL enforcement and dead-letter its
       // group — an l() would silently null it past the NULLABLE check
-      element_at(split(col("pk"), "-"), 1).as("season"),
+      element_at(split(pk, "-"), 1).as("season"),
       // Every API-Football numeric arrives as a STRING and the
       // reference int()s it (raising on non-numeric → the whole
       // group dead-letters, transforms.py:48-64 + 182-184). The raw
@@ -112,19 +110,19 @@ object Normalize {
       // this engine's documented NULLABLE default admits them
       // (SchemaRegistry strict mode restores the reference's
       // behavior).
-      col("s.overall_league_position").as("rank"),
-      col("s.overall_league_PTS").as("points"),
-      col("s.overall_league_payed").as("games_played"), // [sic] upstream field name
-      col("s.overall_league_W").as("wins"),
-      col("s.overall_league_D").as("draws"),
-      col("s.overall_league_L").as("losses"),
-      coalesce(col("s.overall_league_GF"), lit("0")).as("goals_for"),
-      coalesce(col("s.overall_league_GA"), lit("0")).as("goals_against"),
-      (coalesce(l(col("s.overall_league_GF")), lit(0L)) -
-        coalesce(l(col("s.overall_league_GA")), lit(0L))).as("goal_difference"),
-      col("s.overall_league_form").as("form"),
-      col("t.venue.venue_name").as("venue_name"),
-      col("t.venue.venue_city").as("venue_city"),
+      p("s")("overall_league_position").as("rank"),
+      p("s")("overall_league_PTS").as("points"),
+      p("s")("overall_league_payed").as("games_played"), // [sic] upstream field name
+      p("s")("overall_league_W").as("wins"),
+      p("s")("overall_league_D").as("draws"),
+      p("s")("overall_league_L").as("losses"),
+      coalesce(p("s")("overall_league_GF"), lit("0")).as("goals_for"),
+      coalesce(p("s")("overall_league_GA"), lit("0")).as("goals_against"),
+      (coalesce(l(p("s")("overall_league_GF")), lit(0L)) -
+        coalesce(l(p("s")("overall_league_GA")), lit(0L))).as("goal_difference"),
+      p("s")("overall_league_form").as("form"),
+      p("t")("venue")("venue_name").as("venue_name"),
+      p("t")("venue")("venue_city").as("venue_city"),
       lit(null).cast("timestamp").as("update_timestamp"),
       lit("1").as("schema_version")))
 
@@ -159,29 +157,31 @@ object Normalize {
         (s, t) => t("team")("id") === s("standing")("team")("id"),
         (s, t) => struct(s("league").as("league"), s("standing").as("standing"), t.as("t")))
     },
-    Seq(
-      col("pk").as("_group_pk"),
-      concat_ws("-", col("pk"), col("standing.team.id")).as("pk"),
-      col("standing.team.id").cast("string").as("team_id"),
-      col("standing.team.name").as("team_name"),
-      col("t.team.country").as("team_country"),
-      col("league.id").cast("string").as("league_id"),
-      col("league.name").as("league_name"),
-      col("league.season").as("season"),
-      col("standing.rank").as("rank"),
-      col("standing.points").as("points"),
-      col("standing.all.played").as("games_played"),
-      col("standing.all.win").as("wins"),
-      col("standing.all.draw").as("draws"),
-      col("standing.all.lose").as("losses"),
-      coalesce(col("standing.all.goals.for"), lit(0L)).as("goals_for"),
-      coalesce(col("standing.all.goals.against"), lit(0L)).as("goals_against"),
-      col("standing.goalsDiff").as("goal_difference"), // source value verbatim (ref transforms.py:118)
-      col("standing.form").as("form"),
-      col("t.venue.name").as("venue_name"),
-      col("t.venue.city").as("venue_city"),
-      lit(null).cast("timestamp").as("update_timestamp"),
-      lit("1").as("schema_version")))
+    (pk, p) => {
+      val standing = p("standing")
+      Seq(
+        concat_ws("-", pk, standing("team")("id")).as("pk"),
+        standing("team")("id").cast("string").as("team_id"),
+        standing("team")("name").as("team_name"),
+        p("t")("team")("country").as("team_country"),
+        p("league")("id").cast("string").as("league_id"),
+        p("league")("name").as("league_name"),
+        p("league")("season").as("season"),
+        standing("rank").as("rank"),
+        standing("points").as("points"),
+        standing("all")("played").as("games_played"),
+        standing("all")("win").as("wins"),
+        standing("all")("draw").as("draws"),
+        standing("all")("lose").as("losses"),
+        coalesce(standing("all")("goals")("for"), lit(0L)).as("goals_for"),
+        coalesce(standing("all")("goals")("against"), lit(0L)).as("goals_against"),
+        standing("goalsDiff").as("goal_difference"), // source value verbatim (ref transforms.py:118)
+        standing("form").as("form"),
+        p("t")("venue")("name").as("venue_name"),
+        p("t")("venue")("city").as("venue_city"),
+        lit(null).cast("timestamp").as("update_timestamp"),
+        lit("1").as("schema_version"))
+    })
 
   /** E3 dispatch (ref `transforms.py:129-132`): api name → normalizer;
     * unknown name fails fast at construction. */
@@ -193,13 +193,22 @@ object Normalize {
     transformMap.getOrElse(apiName,
       throw new IllegalArgumentException(s"Unknown api_name $apiName"))
 
-  /** Full staged-dir pipeline for one API: route files by endpoint
+  /** Full staged-dir pipeline for one API: the file-list form below over
+    * the `.json` files of every `teams` and `standings` directory three
+    * levels under `root` (the staged layout), listed on the driver as
+    * `binaryFile` lists them. */
+  def pipeline(spark: SparkSession, root: String, apiName: String): (DataFrame, DataFrame) =
+    pipeline(spark, FileLedger.listed(spark, s"$root/*/*/{teams,standings}/*.json").map(_._1),
+      apiName)
+
+  /** Pipeline for one API over exactly `files` (qualified paths, e.g. a
+    * [[FileLedger.newFiles]] snapshot's): route files by endpoint
     * directory (S4, ref `transforms.py:163-166`), normalize, enforce
     * the unified schema, split dead letters at the (season, league)
     * GROUP granularity exactly like the reference (ref
     * `transforms.py:149-184`: any failure inside a group diverts the
-    * whole group). Each staged group gets one verdict, in this order
-    * of precedence:
+    * whole group). A file not in `files` is never read. Each staged
+    * group gets one verdict, in this order of precedence:
     *  - unparseable staged document, stale runs included → its group
     *    dead-letters (`error=corrupt_input`, ref `transforms.py:167-169`);
     *  - a group present in the inputs that produces NO unified rows
@@ -211,110 +220,99 @@ object Normalize {
     *
     * Returns (ok, dead): `dead` has one (pk, error, files) row per
     * failed group, feedable to `Sinks.writeDeadLetter`; `files` holds
-    * the group's staged paths, sorted, as the file system lists them.
+    * the group's non-empty staged paths, sorted.
     *
-    * One keyed pass, like the reference's GroupByKey + tagged
-    * multi-output ParDo: one whole-text scan of the staged files, one
-    * shuffle by `pk`, one aggregate row per group, and only the latest
-    * run file per endpoint DIRECTORY joins — the reference's per-group
-    * loop keeps one document per endpoint (transforms.py:158-166), and
-    * a staged root accumulates runs. The group's pairs are exploded
-    * OUTER, so a group that joins nothing still has one row, and
-    * [[Enforce.tagByGroup]] tags them by the already-partitioned group
-    * key. `ok` is that tagged frame's clean groups and `dead` its first
-    * row per group; neither adds an exchange or a join, and nothing is
-    * pinned. Writing `ok` then `dead` through `Sinks` runs ONE Spark
-    * action, like the reference's tagged outputs: `ok` is written as an
-    * observed twin ([[writeOk]]) that gathers the dead-letter lines in
-    * the same pass, and `dead` is written from those lines with no
-    * Spark job. Both frames stay self-sufficient lazy frames: any other
-    * action, in any order, recomputes from the staged text (a `dead`
-    * written first is collected). The observed lines live until
-    * `Caches.releaseAll`, the lifetime of a root pin; the exit of a
-    * `Caches.scoped` block does not end them (no caller runs this
-    * inside one). Building the frames runs no Spark job. */
-  def pipeline(spark: SparkSession, root: String, apiName: String): (DataFrame, DataFrame) = {
+    * One row per group, like the reference's GroupByKey + tagged
+    * multi-output ParDo: [[graft.sources.GroupedRead]] gives each group
+    * its files' bytes, and only the latest run file per endpoint
+    * DIRECTORY joins — the reference's per-group loop keeps one
+    * document per endpoint (transforms.py:158-166), and a staged root
+    * accumulates runs. The group row holds its unified rows as an
+    * array and its verdict ([[Enforce.groupError]]); `ok` explodes the
+    * clean groups' rows through the enforced projection and `dead` is
+    * the failed group rows, so the plan has no exchange, aggregation or
+    * window, and nothing is pinned. Writing `ok` then `dead` through
+    * `Sinks` runs ONE Spark action, like the reference's tagged
+    * outputs: `ok` is written as an observed twin ([[writeOk]]) that
+    * gathers the dead-letter lines from the group rows in the same
+    * pass, and `dead` is written from those lines with no Spark job.
+    * Both frames stay self-sufficient lazy frames: any other action, in
+    * any order, reads the files again (a `dead` written first is
+    * collected). The observed lines live until `Caches.releaseAll`, the
+    * lifetime of a root pin; the exit of a `Caches.scoped` block does
+    * not end them (no caller runs this inside one). Building the
+    * frames runs no Spark job and reads no file. */
+  def pipeline(spark: SparkSession, files: Seq[String], apiName: String): (DataFrame, DataFrame) = {
     val api = normalizer(apiName)
-    // A glob matching NO files is an empty input, not a PATH_NOT_FOUND
-    // job failure. The file system's own path string (binaryFile's
-    // `path`) is the URL-decoded `_metadata.file_path`; '+' is
-    // pre-escaped because url_decode would read it as a space.
-    val staged =
-      try spark.read.option("wholetext", "true")
-        .text(s"$root/*/*/{teams,standings}/*.json")
-        .select(
-          url_decode(regexp_replace(col("_metadata.file_path"), "\\+", "%2B")).as("path"),
-          col("value"))
-      catch {
-        case e: org.apache.spark.sql.AnalysisException if e.getCondition == "PATH_NOT_FOUND" =>
-          spark.createDataFrame(new java.util.ArrayList[org.apache.spark.sql.Row](),
-            org.apache.spark.sql.types.StructType.fromDDL("path STRING, value STRING"))
-      }
-
-    val endpoint = regexp_extract(col("dir"), "[^/]*$", 0)
-    // one exchange: hash(pk) satisfies both the (pk, dir) and the pk
-    // aggregation, and every step after them keeps it
-    val groups = staged
-      .select(Paths.extractPk(col("path")).as("pk"),
-        regexp_replace(col("path"), "/[^/]*$", "").as("dir"), col("path"), col("value"))
-      .repartition(col("pk"))
-      .groupBy(col("pk"), col("dir"))
-      .agg(
-        max_by(col("value"), col("path")).as("doc"),
-        collect_list(col("path")).as("files"),
-        // the parse probe: get_json_object of the root is null exactly
-        // for unparseable documents
-        max(get_json_object(col("value"), "$").isNull).as("corrupt"))
-      .select(col("pk"), col("files"), col("corrupt"),
-        when(endpoint === "teams", from_json(col("doc"), api.teamsType)).as("teams"),
-        when(endpoint === "standings", from_json(col("doc"), api.standingsType)).as("standings"))
-      .groupBy(col("pk"))
-      .agg(
-        sort_array(flatten(collect_list(col("files")))).as("files"),
-        max(col("corrupt")).as("corrupt"),
-        flatten(collect_list(col("teams"))).as("teams"),
-        flatten(collect_list(col("standings"))).as("standings"))
-
-    // corrupt groups are quarantined BEFORE enforcement so their rows
-    // reach neither output; `pos` is null exactly on a group's
-    // placeholder row (no pairs), 0 on its first pair
-    val v = new Verdicts(Enforce.tagByGroup(
-      groups
-        .select(col("pk"), col("files"), col("corrupt"), posexplode_outer(
-          when(!col("corrupt"), api.join(col("teams"), col("standings"))))
-          .as(Seq("pos", "p")))
-        .select(col("pk"), col("files"), col("corrupt"), col("pos"), col("p.*"))
-        .select(api.row ++ Seq(col("files"), col("corrupt"), col("pos")): _*),
-      SchemaRegistry.v1.fields, "_group_pk"))
+    val row = rowType(spark, api)
+    val rows = col("rows")
+    val verdict = when(rows.isNull, lit("corrupt_input"))
+      .when(size(rows) === 0, lit("empty_or_unjoinable_group"))
+      .when(Enforce.groupError(rows, row, SchemaRegistry.v1.fields).isNotNull,
+        lit("enforcement_failure"))
+    // the barriers keep each group's rows and verdict computed once, not
+    // again in every consumer; `paths` is not named `files` in the
+    // select that reads `files`, where it would shadow it as a lateral
+    // alias inside the lambdas
+    val v = new Verdicts(
+      GroupedRead(spark, files, Paths.pkOf)
+        .select(col("pk"), transform(col("files"), _("path")).as("paths"),
+          ComputeOnce.once(unifiedRows(api)).as("rows"))
+        .select(col("pk"), col("paths").as("files"), rows, ComputeOnce.once(verdict).as("error")),
+      row)
     live.put(v.ok, v)
     live.put(v.dead, v)
     (v.ok, v.dead)
   }
 
-  /** The group verdicts of one [[pipeline]] call: its `ok` and `dead`
-    * frames over one tagged frame, plus the dead-letter lines observed
-    * by the last write of `ok` that returned. */
-  private final class Verdicts(tagged: DataFrame) {
-    private val first = coalesce(col("pos"), lit(0)) === 0
-    private val error = when(col("corrupt"), lit("corrupt_input"))
-      .when(col("pos").isNull, lit("empty_or_unjoinable_group"))
-      .when(col("group_error").isNotNull, lit("enforcement_failure"))
-    private def okRows(t: DataFrame): DataFrame =
-      Enforce.okGroups(t.filter(col("pos").isNotNull), SchemaRegistry.v1.fields)
+  /** A [[GroupedRead]] group's unified rows, an array of one struct per
+    * joined pair; null for a corrupt group, so that its rows reach
+    * neither output. */
+  private def unifiedRows(api: Api): Column = {
+    val staged = col("files")
+    val text = (f: Column) => f("bytes").cast("string")
+    // the parse probe: get_json_object of the root is null exactly for
+    // unparseable documents
+    val corrupt = exists(staged, f => get_json_object(text(f), "$").isNull)
+    // the latest file of each `endpoint` directory, parsed
+    def latest(endpoint: String, t: DataType): Column = flatten(array_compact(transform(
+      filter(staged, f => f("dir").endsWith(s"/$endpoint") &&
+        forall(staged, g => g("dir") =!= f("dir") || g("path") <= f("path"))),
+      f => from_json(text(f), t))))
+    when(!corrupt, transform(
+      api.join(latest("teams", api.teamsType), latest("standings", api.standingsType)),
+      p => struct(api.row(col("pk"), p): _*)))
+  }
 
-    val ok: DataFrame = okRows(tagged)
-    val dead: DataFrame = tagged.filter(first)
-      .select(col("_group_pk").as("pk"), error.as("error"), col("files"))
-      .filter(col("error").isNotNull)
-    // `Enforce.deadLetterJson(dead, "pk")`'s line on the row `dead`
-    // keeps for a failed group, null on every other row
-    private val line = when(first && error.isNotNull,
-      to_json(struct(col("_group_pk").as("PK"), col("files"), error.as("error"))))
+  // the type of one API's unified row struct, learned once per JVM
+  private val rowTypes = new java.util.concurrent.ConcurrentHashMap[Api, StructType]()
+  private def rowType(spark: SparkSession, api: Api): StructType =
+    rowTypes.computeIfAbsent(api, _ =>
+      spark.createDataFrame(new java.util.ArrayList[org.apache.spark.sql.Row](), GroupedRead.Schema)
+        .select(unifiedRows(api)).schema.head.dataType
+        .asInstanceOf[ArrayType].elementType.asInstanceOf[StructType])
+
+  /** The group verdicts of one [[pipeline]] call: its `ok` and `dead`
+    * frames over one frame of group rows `(pk, files, rows, error)`,
+    * plus the dead-letter lines observed by the last write of `ok` that
+    * returned. */
+  private final class Verdicts(groups: DataFrame, rowType: StructType) {
+    private def okRows(g: DataFrame): DataFrame =
+      g.select(inline(when(col("error").isNull, transform(col("rows"),
+        r => struct(Enforce.enforced(rowType, SchemaRegistry.v1.fields, r.getField): _*)))))
+
+    val ok: DataFrame = okRows(groups)
+    val dead: DataFrame = groups.filter(col("error").isNotNull)
+      .select(col("pk"), col("error"), col("files"))
+    // `Enforce.deadLetterJson(dead, "pk")`'s line on a failed group's
+    // row, null on every other row
+    private val line = when(col("error").isNotNull,
+      to_json(struct(col("pk").as("PK"), col("files"), col("error"))))
     @volatile private var observed: Option[Observation] = None
 
     def writeOk(write: DataFrame => Unit): Unit = {
       val o = Observation()
-      write(okRows(tagged.observe(o, collect_list(line).as("lines"))))
+      write(okRows(groups.observe(o, collect_list(line).as("lines"))))
       observed = Some(o)
     }
 
@@ -333,9 +331,9 @@ object Normalize {
 
   /** Run `write` on `df`; a [[pipeline]] `ok` is handed over as its
     * observed twin instead — the same rows from a plan created here,
-    * whose `CollectMetrics` node between the tagged rows and the ok
-    * filter gathers every failed group's dead-letter line in the same
-    * pass. `write` must run one complete action (a sink write): a
+    * whose `CollectMetrics` node between the group rows and the ok
+    * rows' `inline` gathers every failed group's dead-letter line in
+    * the same pass. `write` must run one complete action (a sink write): a
     * partial action never sees the twin. */
   private[engine] def writeOk(df: DataFrame)(write: DataFrame => Unit): Unit =
     Option(live.get(df)).filter(_.ok eq df) match {

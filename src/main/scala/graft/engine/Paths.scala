@@ -19,6 +19,7 @@ object Paths {
   // the anchor, ".../offseason_2024/league_39/..." would match on the
   // "season_2024" SUFFIX and merge foreign files into a real group
   private val SeasonLeague = "/season_([0-9]+)/league_([0-9]+)/"
+  private val SeasonLeagueRe = SeasonLeague.r.unanchored
 
   def seasonOf(path: Column): Column = regexp_extract(path, SeasonLeague, 1)
   def leagueOf(path: Column): Column = regexp_extract(path, SeasonLeague, 2)
@@ -28,4 +29,10 @@ object Paths {
   def extractPk(path: Column): Column =
     when(seasonOf(path) === "", lit("unknown"))
       .otherwise(concat(seasonOf(path), lit("-"), leagueOf(path)))
+
+  /** [[extractPk]] of one path string, on the driver. */
+  def pkOf(path: String): String = path match {
+    case SeasonLeagueRe(season, league) => s"$season-$league"
+    case _ => "unknown"
+  }
 }

@@ -8,7 +8,7 @@ import java.nio.file.{Files, Path, Paths}
   *
   * K3: raw payloads land under the path convention
   * `root/season_S/league_L/endpoint/runid_date.json` — the layout the
-  * engine's readers (`Normalize.pipeline`'s text scan, the
+  * engine's readers (`Normalize.pipeline`'s grouped read, the
   * `staged-json` DSv2 source) recover partition keys from.
   *
   * K4: a `Run` tracks every file it wrote; on failure `rollback()`

@@ -144,8 +144,8 @@ object Football {
     * unjoinable. The corrupt-input class is ALSO driver-gated: group
     * 2021-104 stages a single unparseable teams file
     * (`corrupt_0.json`); Spark dead-letters it through the REAL
-    * whole-file parse probe in `Normalize.pipeline`'s single text
-    * scan (ref `transforms.py:167-169`), while the oracle's read_json globs
+    * whole-file parse probe in `Normalize.pipeline`'s group rows
+    * (ref `transforms.py:167-169`), while the oracle's read_json globs
     * name `run_*.json` only (a filename predicate — so DuckDB never
     * parses the corrupt bytes) and derive the `corrupt_input` dead
     * row from `glob()`, which lists files without reading them.
@@ -167,7 +167,7 @@ object Football {
     val root = graft.engine.WorkDirs.runScoped("q86_stage")
     // the latest-run replay: only the lexicographically-latest run file
     // per endpoint DIRECTORY participates (Normalize.pipeline's
-    // per-directory max_by — without it a second staged run joins 2x teams against 2x
+    // per-directory latest file — without it a second staged run joins 2x teams against 2x
     // standings and every row quadruplicates)
     val latest = "QUALIFY filename = max(filename) OVER " +
       "(PARTITION BY regexp_replace(filename, '/[^/]*$', ''))"

@@ -85,7 +85,7 @@ object FileLedger {
     * non-empty match, and the visible files directly inside a matched
     * directory, each as its qualified path string (byte-identical to
     * `binaryFile`'s `path` column) with its length. */
-  private def listed(spark: SparkSession, glob: String): Seq[(String, Long)] = {
+  private[graft] def listed(spark: SparkSession, glob: String): Seq[(String, Long)] = {
     val pattern = new Path(glob)
     val fs = fsOf(spark, pattern)
     Option(fs.globStatus(pattern)).toSeq.flatten

@@ -198,7 +198,7 @@ final class StagedJsonScan(root: String, required: StructType,
     val fs = new HPath(root).getFileSystem(conf.value)
     // a root that does not exist (yet) is an EMPTY table, not a
     // planning-time FileNotFoundException — the same contract as
-    // Normalize.pipeline's guarded glob read and FileLedger.listing
+    // Normalize.pipeline's root form and FileLedger.listing
     // (a glob that matches nothing is an empty input):
     // ingestion pipelines routinely plan against a landing dir the
     // producer has not created on the first run

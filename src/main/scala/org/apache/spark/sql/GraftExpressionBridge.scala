@@ -5,8 +5,9 @@ import org.apache.spark.sql.catalyst.expressions.Expression
 /** Tiny bridge into Spark's `private[sql]` Column↔Expression
   * conversions, so graft's custom Catalyst expressions can expose a
   * public Column API without going through the function registry.
-  * (The standard extension-library pattern; nothing else from the
-  * internal API is touched.)
+  * (The standard extension-library pattern.) Besides those, it touches
+  * only the session and plan accessors below and the `private[spark]`
+  * task input counters, for graft's own file reads.
   */
 object GraftExpressionBridge {
   def column(e: Expression): Column = classic.ExpressionUtils.column(e)
@@ -33,4 +34,13 @@ object GraftExpressionBridge {
     * expression tree up front). */
   def expressionEager(c: Column): Expression =
     classic.ColumnNodeToExpressionConverter(c.node)
+
+  /** Count `records` input records of `bytes` bytes against the running
+    * task, as Spark's own file scans do; a no-op outside a task. */
+  def countInput(records: Long, bytes: Long): Unit =
+    Option(org.apache.spark.TaskContext.get()).foreach { tc =>
+      val in = tc.taskMetrics().inputMetrics
+      in.incRecordsRead(records)
+      in.incBytesRead(bytes)
+    }
 }

@@ -58,14 +58,20 @@ class EnforceSpec extends SparkSpec {
     assert(ok.count() + dead.count() == raw.count())
   }
 
-  test("total-function property holds on generated rows (scalacheck)") {
+  // generated (pk, points, seen) rows: clean, uncastable and null cells
+  private val cell = {
     import org.scalacheck.Gen
-    import org.scalacheck.rng.Seed
-    val cell = Gen.oneOf(
+    Gen.oneOf(
       Gen.const(null: String), Gen.numStr.map(_.take(9)),
       Gen.alphaStr.map(_.take(6)), Gen.const("2024-01-01 10:00:00"),
       Gen.const(""), Gen.const("-7"))
-    val rows = Gen.listOfN(200, Gen.zip(cell, cell, cell))
+  }
+  private val genRow = org.scalacheck.Gen.zip(cell, cell, cell)
+
+  test("total-function property holds on generated rows (scalacheck)") {
+    import org.scalacheck.Gen
+    import org.scalacheck.rng.Seed
+    val rows = Gen.listOfN(200, genRow)
       .apply(Gen.Parameters.default, Seed(7L)).get
     val df = rows.toDF("pk", "points", "seen")
     val (ok, dead) = Enforce.split(df, schema)
@@ -80,6 +86,29 @@ class EnforceSpec extends SparkSpec {
     // only the clean 2022-40 group survives.
     assert(ok.count() == 1)
     assert(dead.count() == 3)
+  }
+
+  test("the in-row group verdict equals tagByGroup's window verdict (scalacheck)") {
+    import org.scalacheck.Gen
+    import org.scalacheck.rng.Seed
+    // small groups, so that some are all clean; the frame may lack the
+    // nullable `seen` field, read as absent by both verdicts
+    val groups = Gen.listOfN(200, Gen.zip(Gen.choose(0, 149), genRow))
+      .apply(Gen.Parameters.default, Seed(11L)).get
+    val df = groups.map { case (g, (pk, points, seen)) => (g, pk, points, seen) }
+      .toDF("g", "pk", "points", "seen")
+    for (fields <- Seq(Seq("pk", "points", "seen"), Seq("pk", "points"))) {
+      val rows = df.select(col("g") +: fields.map(col): _*)
+      val window = Enforce.tagByGroup(rows, schema, "g").select("g", "group_error")
+        .distinct().as[(Int, String)].collect().toMap
+      val rowType = rows.drop("g").schema
+      val inRow = rows.groupBy("g").agg(collect_list(struct(fields.map(col): _*)).as("rows"))
+        .select(col("g"), Enforce.groupError(col("rows"), rowType, schema))
+        .as[(Int, String)].collect().toMap
+      assert(window.size == groups.map(_._1).distinct.size)
+      assert(window.values.exists(_ == null) && window.values.exists(_ != null), window)
+      assert(inRow == window, (inRow.toSet diff window.toSet).mkString(", "))
+    }
   }
 
   test("observed metrics emit one JSON line per action with zero extra scans (O5 analog)") {

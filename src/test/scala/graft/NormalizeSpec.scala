@@ -294,21 +294,33 @@ class NormalizeSpec extends SparkSpec {
   }
 
   // `body`'s result, the Spark jobs it submitted and the input records
-  // its tasks read (one per staged file for a whole-text scan)
-  private def jobsAndReads[A](tag: String)(body: => A): (A, Seq[String], Long) = {
-    val read = new java.util.concurrent.atomic.AtomicLong
+  // and bytes its tasks read (the grouped read counts one record per
+  // file it opens, of the file's length)
+  private def jobsAndInput[A](tag: String)(body: => A): (A, Seq[String], (Long, Long)) = {
+    val records, bytes = new java.util.concurrent.atomic.AtomicLong
     val listener = new org.apache.spark.scheduler.SparkListener {
       override def onTaskEnd(e: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit =
-        if (e.taskMetrics != null) read.addAndGet(e.taskMetrics.inputMetrics.recordsRead)
+        if (e.taskMetrics != null) {
+          records.addAndGet(e.taskMetrics.inputMetrics.recordsRead)
+          bytes.addAndGet(e.taskMetrics.inputMetrics.bytesRead)
+        }
     }
     spark.sparkContext.addSparkListener(listener)
     try {
       val (a, jobs) = PlanLint.constructionJobSites(spark, tag)(body)
-      (a, jobs, read.get)
+      (a, jobs, (records.get, bytes.get))
     } finally spark.sparkContext.removeSparkListener(listener)
   }
 
   private val mixedFiles = 13L
+
+  // the staged files under `root`, with their total length
+  private def stagedFiles(root: String): (Long, Long) = {
+    val walk = Files.walk(Path.of(root))
+    val sizes = try walk.filter(Files.isRegularFile(_)).map[Long](Files.size(_)).toArray
+      finally walk.close()
+    (sizes.length.toLong, sizes.map(_.asInstanceOf[Long]).sum)
+  }
 
   private def deadFile(dir: String): String = Files.readString(Path.of(dir, "part-00000.json"))
 
@@ -322,15 +334,18 @@ class NormalizeSpec extends SparkSpec {
     deadFile(s"$out/dead")
   }
 
-  test("writing ok then dead scans the staged text once; the dead write runs no job") {
+  test("writing ok then dead opens each staged file once; the dead write runs no job") {
     val (ok, dead) = Normalize.pipeline(spark, s"$mixedRoot/api", "apifootball")
     val out = Files.createTempDirectory("graft_once").toString
-    val (_, _, okReads) = jobsAndReads("ok_write") { Sinks.writeUnified(ok, out, "apifootball") }
-    val (_, deadJobs, deadReads) = jobsAndReads("dead_write") {
+    val (_, _, okReads) = jobsAndInput("ok_write") { Sinks.writeUnified(ok, out, "apifootball") }
+    val (_, deadJobs, deadReads) = jobsAndInput("dead_write") {
       Sinks.writeDeadLetter(dead, "pk", s"$out/dead")
     }
-    assert(okReads == mixedFiles, s"the ok write read $okReads records")
-    assert(deadJobs.isEmpty && deadReads == 0L, deadJobs.mkString(","))
+    // one record per file opened, and every byte of every file read once
+    val staged = stagedFiles(mixedRoot)
+    assert(staged._1 == mixedFiles)
+    assert(okReads == staged, s"the ok write read (records, bytes) $okReads")
+    assert(deadJobs.isEmpty && deadReads == (0L, 0L), deadJobs.mkString(","))
     assert(spark.read.text(s"$out/dead").count() == 5L)
     graft.Caches.releaseAll()
   }
@@ -365,7 +380,7 @@ class NormalizeSpec extends SparkSpec {
     val afterRelease = mixedDeadFile { (ok, dead, out) =>
       Sinks.writeUnified(ok, out, "apifootball")
       graft.Caches.releaseAll()
-      val (_, jobs, _) = jobsAndReads("dead_after_release") {
+      val (_, jobs, _) = jobsAndInput("dead_after_release") {
         Sinks.writeDeadLetter(dead, "pk", s"$out/dead")
       }
       assert(jobs.nonEmpty, "the released verdicts were reused")
@@ -419,7 +434,7 @@ class NormalizeSpec extends SparkSpec {
     assert(back.count() == 1L && back.filter(col("update_timestamp").isNull).count() == 0L)
   }
 
-  test("an ETL day's sinks: the upsert submits at most 2 Spark jobs, the dead-letter write none") {
+  test("an ETL day's upsert submits exactly 1 Spark job, its dead-letter write none") {
     val (ok, dead) = Normalize.pipeline(spark, s"$mixedRoot/api", "apifootball")
     val out = Files.createTempDirectory("graft_day_jobs").toString
     val (_, upsert) = PlanLint.constructionJobSites(spark, "day_upsert") {
@@ -428,8 +443,8 @@ class NormalizeSpec extends SparkSpec {
     val (_, deadLetters) = PlanLint.constructionJobSites(spark, "day_dead") {
       Sinks.writeDeadLetter(dead, "pk", s"$out/dead")
     }
-    // the shuffle by group key, then the write
-    assert(upsert.nonEmpty && upsert.size <= 2, upsert.mkString(","))
+    // the write: the plan has no exchange, so no map stage runs first
+    assert(upsert.size == 1, upsert.mkString(","))
     assert(deadLetters.isEmpty, deadLetters.mkString(","))
     graft.Caches.releaseAll()
   }
@@ -467,20 +482,83 @@ class NormalizeSpec extends SparkSpec {
     graft.Caches.releaseAll()
   }
 
-  test("building the pipeline runs no Spark job; each output reads one file relation, the text scan") {
+  test("building the pipeline runs no Spark job; each output reads one grouped scan") {
+    import org.apache.spark.sql.execution.LogicalRDD
     import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
-    import org.apache.spark.sql.execution.datasources.text.TextFileFormat
     val ((ok, dead), jobs) = PlanLint.constructionJobSites(spark, "normalize_build") {
       Normalize.pipeline(spark, s"$mixedRoot/api", "apifootball")
     }
     assert(jobs.isEmpty, jobs.mkString(","))
-    def fileScans(plan: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan) =
-      plan.collect { case LogicalRelation(r: HadoopFsRelation, _, _, _, _) => r }
     for (df <- Seq(ok, dead)) {
-      val scans = fileScans(df.queryExecution.analyzed)
-      assert(scans.size == 1 && scans.head.fileFormat.isInstanceOf[TextFileFormat],
-        scans.mkString(","))
+      val plan = df.queryExecution.analyzed
+      val grouped = plan.collect { case r: LogicalRDD => r }
+      val fileScans = plan.collect { case LogicalRelation(r: HadoopFsRelation, _, _, _, _) => r }
+      assert(grouped.size == 1 && fileScans.isEmpty, plan.treeString)
+      assert(grouped.head.output.map(_.name) == Seq("pk", "files"), plan.treeString)
     }
+    graft.Caches.releaseAll()
+  }
+
+  test("the file-list form reads only its list, not a file staged after the listing") {
+    val root = Files.createTempDirectory("graft_files_form")
+    val teams =
+      """[{"team_key": "1", "team_name": "A", "team_country": "X",
+        |  "venue": {"venue_name": "V", "venue_city": "C"}}]""".stripMargin
+    def standings(pts: String) =
+      s"""[{"team_id": "1", "team_name": "A", "league_id": "8",
+         |  "league_name": "L", "overall_league_position": "1",
+         |  "overall_league_PTS": "$pts", "overall_league_payed": "4",
+         |  "overall_league_W": "3", "overall_league_D": "1", "overall_league_L": "0",
+         |  "overall_league_GF": "9", "overall_league_GA": "2",
+         |  "overall_league_form": "WWWD"}]""".stripMargin
+    write(root, "api/season_2023/league_8/teams/run_1.json", teams)
+    write(root, "api/season_2023/league_8/standings/run_1.json", standings("10"))
+    val listed = graft.sources.FileLedger.listing(spark, s"$root/api/*/*/*/*.json")
+      .select("path").as[String].collect().toSeq
+    val (ok, dead) = Normalize.pipeline(spark, listed, "apifootball")
+    // after the listing: a later run that would win its directory, and
+    // a corrupt file that would dead-letter a group
+    write(root, "api/season_2023/league_8/standings/run_2.json", standings("13"))
+    write(root, "api/season_2023/league_9/teams/run_1.json", "{{{ not json")
+    val (rows, _, (reads, _)) = jobsAndInput("files_form") {
+      ok.select("points").as[Long].collect().toSeq
+    }
+    assert(rows == Seq(10L), rows)
+    assert(reads == listed.size.toLong, s"read $reads files of ${listed.size} listed")
+    assert(dead.count() == 0L)
+    // the root form lists the directory when it is built
+    val (okRoot, deadRoot) = Normalize.pipeline(spark, s"$root/api", "apifootball")
+    assert(okRoot.select("points").as[Long].collect().toSeq == Seq(13L))
+    assert(deadRoot.select("pk").as[String].collect().toSeq == Seq("2023-9"))
+    graft.Caches.releaseAll()
+  }
+
+  test("an API-day logs no metadata-directory probe warning") {
+    import org.apache.logging.log4j.LogManager
+    import org.apache.logging.log4j.core.{LogEvent, Logger}
+    import org.apache.logging.log4j.core.appender.AbstractAppender
+    import org.apache.logging.log4j.core.config.Property
+    val warnings = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val capture = new AbstractAppender("normalize-warnings", null, null, true, Property.EMPTY_ARRAY) {
+      override def append(e: LogEvent): Unit =
+        if (e.getLevel.isMoreSpecificThan(org.apache.logging.log4j.Level.WARN))
+          warnings.add(s"${e.getLoggerName}: ${e.getMessage.getFormattedMessage}")
+    }
+    capture.start()
+    val rootLogger = LogManager.getRootLogger.asInstanceOf[Logger]
+    rootLogger.addAppender(capture)
+    val out = Files.createTempDirectory("graft_day_warn").toString
+    try {
+      val (ok, dead) = Normalize.pipeline(spark, s"$mixedRoot/api", "apifootball")
+      Sinks.writeUnifiedUpsert(ok, s"$out/table", "apifootball")
+      Sinks.writeDeadLetter(dead, "pk", s"$out/dead")
+    } finally {
+      rootLogger.removeAppender(capture)
+      capture.stop()
+    }
+    assert(deadFile(s"$out/dead").linesIterator.size == 5)
+    val probes = warnings.toArray.map(_.toString).filter(_.contains("Assume no metadata directory"))
+    assert(probes.isEmpty, probes.mkString("\n"))
     graft.Caches.releaseAll()
   }
 

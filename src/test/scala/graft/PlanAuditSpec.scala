@@ -356,28 +356,31 @@ class PlanAuditSpec extends SparkSpec {
     assert(df.count() == q68(spark, sfDir).count())
   }
 
-  test("q86: ok and dead share one text scan per api through exchange reuse") {
-    import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan}
+  test("q86: one grouped scan per output, and no exchange but the final sort's") {
+    import org.apache.spark.sql.execution.{FileSourceScanExec, RDDScanExec, SparkPlan}
     import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
-    import org.apache.spark.sql.execution.datasources.text.TextFileFormat
-    import org.apache.spark.sql.execution.exchange.ReusedExchangeExec
-    // a reused exchange reads the original's output: do not descend
+    import org.apache.spark.sql.execution.aggregate.ObjectHashAggregateExec
+    import org.apache.spark.sql.execution.exchange.Exchange
+    import org.apache.spark.sql.execution.window.WindowExec
     def nodes(p: SparkPlan): Seq[SparkPlan] = p match {
       case a: AdaptiveSparkPlanExec => nodes(a.executedPlan)
       case q: QueryStageExec => q +: nodes(q.plan)
-      case r: ReusedExchangeExec => Seq(r)
       case o => o +: o.children.flatMap(nodes)
     }
     graft.Caches.releaseAll()
     val df = SparkEntry.queries("q86_parity_pipeline")(spark, sfDir)
     df.collect()
     val executed = nodes(df.queryExecution.executedPlan)
-    val textScans = executed.collect {
-      case s: FileSourceScanExec if s.relation.fileFormat.isInstanceOf[TextFileFormat] => s
-    }
     val p = df.queryExecution.executedPlan.toString
-    assert(textScans.size == 2, s"expected one staged-text scan per api, got ${textScans.size}:\n$p")
-    assert(executed.exists(_.isInstanceOf[ReusedExchangeExec]), s"no exchange reused:\n$p")
+    // ok and dead of both apis: Normalize's grouped read, one row per
+    // (season, league) group, and no file-source scan
+    assert(executed.count(_.isInstanceOf[RDDScanExec]) == 4, s"expected 4 grouped scans:\n$p")
+    assert(!executed.exists(_.isInstanceOf[FileSourceScanExec]), s"a file-source scan remains:\n$p")
+    // the group verdict is in-row: no window, no object aggregate, and
+    // the one exchange is the final ORDER BY's
+    assert(!executed.exists(n => n.isInstanceOf[WindowExec] || n.isInstanceOf[ObjectHashAggregateExec]),
+      s"a window or object aggregate remains:\n$p")
+    assert(executed.count(_.isInstanceOf[Exchange]) == 1, s"expected only the sort's exchange:\n$p")
     graft.Caches.releaseAll()
   }
 

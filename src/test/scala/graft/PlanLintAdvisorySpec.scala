@@ -34,12 +34,6 @@ class PlanLintAdvisorySpec extends SparkSpec {
       "t94_feature_hash",    // sparse-vector render: sort_array(collect_list)
                              // over ≤ dim (=64) signed buckets per doc —
                              // dimension-bounded, never corpus-bounded
-      // q86: Normalize.pipeline's keyed pass collects each (season,
-      // league) group's staged paths and its latest document per
-      // endpoint directory after the one hash(pk) exchange — the
-      // reference's own GroupByKey (pipeline.py:37-43); group-bounded
-      // (one league-season's handful of files), never corpus-bounded
-      "q86_parity_pipeline",
       // g03/g08/g10: Graph.coOccurrenceEdges' collect_set of container
       // members — group-bounded by the operator's documented bounded-
       // membership precondition (the d65 maxDf discipline), never
