@@ -1,7 +1,11 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{ByteType, DataType, IntegerType, LongType, ShortType,
+  StringType, StructField, StructType}
 
 import graft.operators.TextHash._
 
@@ -517,36 +521,45 @@ object Dedup {
     * direct containees (dropped), removes resolved nodes' edges, and
     * repeats; rounds = alternation depth of the chain structure, which
     * for near-dup corpora is the (shallow) quote-nesting depth, NOT
-    * corpus size. Every per-round frame is id-narrow (≤ 2 longs), so
-    * at 100 TB the loop costs rounds × (skinny anti-joins), all
-    * checkpoint-released as the loop advances (Caches contract). If
-    * the pair graph contains a containment CYCLE (possible only below
-    * t = 1.0, when every cycle member is near-equal to its neighbors
-    * but mutual thresholds just missed), the unresolved remainder is
-    * conservatively KEPT — never drop without a surviving container. */
+    * corpus size. If the pair graph contains a containment CYCLE
+    * (possible only below t = 1.0, when every cycle member is
+    * near-equal to its neighbors but mutual thresholds just missed),
+    * the unresolved remainder is conservatively KEPT — never drop
+    * without a surviving container.
+    *
+    * Two regimes run the peel, with the same semantics, the same cycle
+    * rule and the same `maxIter` failure. Both start from one lazy
+    * checkpoint of the folded edge set and one probe that counts it.
+    *  - SMALL edge sets, whose rows (2 ids each, at the id type's
+    *    default size) fit under the session's
+    *    `spark.sql.autoBroadcastJoinThreshold`, finish on the driver:
+    *    the edges are collected, their checkpoint is released at once,
+    *    the peel runs in memory, and the drops come back as a local
+    *    relation the anti-join broadcasts. Three Spark executions in
+    *    all, whatever the chain depth. A threshold ≤ 0 never fits.
+    *  - LARGER edge sets peel distributed: every per-round frame is
+    *    id-narrow (≤ 2 ids), so at 100 TB the loop costs rounds ×
+    *    (skinny anti-joins), all checkpoint-released as the loop
+    *    advances (Caches contract). */
   def dropContainedMinimal(docs: DataFrame, id: Column, text: Column,
-      n: Int = DefaultShingleN, threshold: Double = 0.9, maxIter: Int = 20): DataFrame = {
-    val pairs = containmentPairs(docs, id, text, n, threshold)
-    // ONE MATERIALIZING ACTION PER ROUND (the pageRank lazy-checkpoint
-    // + fused-probe pattern, ported per the r12 profile: under a
-    // throttled driver the old loop's ~5 scheduling points per round —
-    // two eager checkpoints, two counts, one more checkpoint —
-    // dominated d58's variance). The round state is a SINGLE tagged
-    // frame carrying
-    // both the unresolved edges (edge = true: c contained-in p,
-    // mutual pairs folded hi→lo, the keep-min-id rule) and the
-    // accumulated drop set (edge = false, p null); each round builds
-    // the next state as one lazy localCheckpoint whose materializing
-    // action is the fused probe agg (edges remaining + drops so far —
-    // both counts in one scan of the just-written blocks). Progress
-    // and the cyclic-remainder exit both fall out of the probe: a
-    // round that drops nothing while edges remain means no sinks ⇒
-    // the remainder is a containment cycle, conservatively KEPT (see
-    // scaladoc). Every frame stays id-narrow (≤ 2 longs + 1 bool);
-    // the previous round's blocks are released only AFTER the next
-    // state is materialized (a lazy localCheckpoint reads the
-    // parent's blocks).
-    var (state, releaseState) = graft.Caches.checkpoint(
+      n: Int = DefaultShingleN, threshold: Double = 0.9, maxIter: Int = 20): DataFrame =
+    peelContainment(docs, id, containmentPairs(docs, id, text, n, threshold), maxIter,
+      math.max(0L, docs.sparkSession.sessionState.conf.autoBroadcastJoinThreshold))
+
+  /** The peel of [[dropContainedMinimal]] over a `(contained,
+    * container)` pair frame. An edge set of at most `driverBytes`
+    * (rows × 2 × the id type's default size) finishes on the driver;
+    * `driverBytes` = 0 keeps the distributed loop for any edge set. */
+  private[graft] def peelContainment(docs: DataFrame, id: Column, pairs: DataFrame,
+      maxIter: Int, driverBytes: Long): DataFrame = {
+    // The state is a SINGLE tagged frame carrying both the unresolved
+    // edges (edge = true: c contained-in p, mutual pairs folded hi→lo,
+    // the keep-min-id rule) and, in the distributed loop, the
+    // accumulated drop set (edge = false, p null). It is built as one
+    // lazy localCheckpoint whose materializing action is the fused
+    // probe agg (edges remaining + drops so far — both counts in one
+    // scan of the just-written blocks).
+    val (state, releaseState) = graft.Caches.checkpoint(
       pairs.select(
           least(col("contained"), col("container")).as("lo"),
           greatest(col("contained"), col("container")).as("hi"),
@@ -561,13 +574,83 @@ object Dedup {
             .otherwise(col("lo")).as("p"),
           lit(true).as("graft_edge")),
       eager = false)
-    def probe(s: DataFrame): (Long, Long) = {
-      val r = s.agg(
-        count(when(col("graft_edge"), lit(1))),
-        count(when(!col("graft_edge"), lit(1)))).head()
-      (r.getLong(0), r.getLong(1))
+    val (nRem, nDropped) = probeState(state)
+    // the drop rows must carry the CALLER'S id type (the signature
+    // takes an arbitrary id Column — string ids are valid); a
+    // hardcoded long would fail the union's analysis
+    val idType = state.schema("p").dataType
+    val dropped =
+      if (driverBytes > 0 && nRem <= driverBytes / (2L * idType.defaultSize) &&
+          joinsByEquals(idType))
+        peelOnDriver(state, releaseState, idType, maxIter)
+      else peelOnCluster(state, releaseState, idType, nRem, nDropped, maxIter)
+    docs.join(dropped, id === col("graft_drop"), "left_anti")
+  }
+
+  /** (edges remaining, drops so far) of a peel state, in one scan. */
+  private def probeState(s: DataFrame): (Long, Long) = {
+    val r = s.agg(
+      count(when(col("graft_edge"), lit(1))),
+      count(when(!col("graft_edge"), lit(1)))).head()
+    (r.getLong(0), r.getLong(1))
+  }
+
+  /** Id types whose collected values compare with `==` exactly as
+    * Spark's equi-join compares them (the driver peel keys sets on
+    * them): integers and default-collation strings. */
+  private def joinsByEquals(t: DataType): Boolean = t match {
+    case ByteType | ShortType | IntegerType | LongType | StringType => true
+    case _ => false
+  }
+
+  private def unresolvedPeel(maxIter: Int): String =
+    s"dropContainedMinimal did not resolve in $maxIter rounds — chain depth exceeds the bound; raise maxIter"
+
+  /** The small-state regime: the init state holds edges only, so the
+    * drops so far are none. Same round as the distributed loop's, on
+    * in-memory sets. */
+  private def peelOnDriver(state: DataFrame, releaseState: () => Unit,
+      idType: DataType, maxIter: Int): DataFrame = {
+    var rem = try state.select(col("c"), col("p")).collect().toSeq.map(r => (r.get(0), r.get(1)))
+      finally releaseState()
+    val drops = Set.newBuilder[Any]
+    var iter = 0
+    var cyclic = false
+    while (rem.nonEmpty && !cyclic && iter < maxIter) {
+      val contained = rem.map(_._1).toSet
+      val kept = rem.map(_._2).filterNot(contained).toSet
+      val newDrop = rem.collect { case (c, p) if kept(p) => c }.toSet
+      val resolved = kept ++ newDrop
+      rem = rem.filterNot { case (c, p) => resolved(c) || resolved(p) }
+      cyclic = newDrop.isEmpty && rem.nonEmpty
+      drops ++= newDrop
+      iter += 1
     }
-    var (nRem, nDropped) = probe(state)
+    require(rem.isEmpty || cyclic, unresolvedPeel(maxIter))
+    state.sparkSession.createDataFrame(drops.result().toSeq.map(Row(_)).asJava,
+      StructType(Seq(StructField("graft_drop", idType))))
+  }
+
+  /** The distributed regime, for edge sets too large for the driver. */
+  private def peelOnCluster(init: DataFrame, releaseInit: () => Unit, idType: DataType,
+      initRem: Long, initDropped: Long, maxIter: Int): DataFrame = {
+    // ONE MATERIALIZING ACTION PER ROUND (the pageRank lazy-checkpoint
+    // + fused-probe pattern, ported per the r12 profile: under a
+    // throttled driver the old loop's ~5 scheduling points per round —
+    // two eager checkpoints, two counts, one more checkpoint —
+    // dominated d58's variance). Each round builds the next state as
+    // one lazy localCheckpoint materialized by its probe. Progress
+    // and the cyclic-remainder exit both fall out of the probe: a
+    // round that drops nothing while edges remain means no sinks ⇒
+    // the remainder is a containment cycle, conservatively KEPT (see
+    // scaladoc). Every frame stays id-narrow (≤ 2 ids + 1 bool);
+    // the previous round's blocks are released only AFTER the next
+    // state is materialized (a lazy localCheckpoint reads the
+    // parent's blocks).
+    var state = init
+    var releaseState = releaseInit
+    var nRem = initRem
+    var nDropped = initDropped
     var iter = 0
     var cyclic = false
     // deliberately NOT staticLoopPlans: the peel frames SHRINK round
@@ -597,17 +680,13 @@ object Dedup {
       val nextEdges = edges
         .join(resolved.select(col("id").as("c")), Seq("c"), "left_anti")
         .join(resolved.select(col("id").as("p")), Seq("p"), "left_anti")
-      // the drop rows' null p must carry the CALLER'S id type (the
-      // signature takes an arbitrary id Column — string ids are
-      // valid); a hardcoded long would fail the union's analysis
-      val idType = state.schema("p").dataType
       val (nextState, releaseNext) = graft.Caches.checkpoint(
         nextEdges.select(col("c"), col("p"), lit(true).as("graft_edge"))
           .unionAll(drops)
           .unionAll(newDrop.select(col("c"),
             lit(null).cast(idType).as("p"), lit(false).as("graft_edge"))),
         eager = false)
-      val (nextRem, nextDropped) = probe(nextState)
+      val (nextRem, nextDropped) = probeState(nextState)
       // no new drops while edges remain ⇒ no sinks ⇒ cyclic remainder
       cyclic = nextDropped == nDropped && nextRem > 0
       releaseState()
@@ -615,11 +694,8 @@ object Dedup {
       nRem = nextRem; nDropped = nextDropped
       iter += 1
     }
-    require(nRem == 0L || cyclic,
-      s"dropContainedMinimal did not resolve in $maxIter rounds — chain depth exceeds the bound; raise maxIter")
-    val dropped = state.filter(!col("graft_edge"))
-      .select(col("c").as("graft_drop"))
-    docs.join(dropped, id === col("graft_drop"), "left_anti")
+    require(nRem == 0L || cyclic, unresolvedPeel(maxIter))
+    state.filter(!col("graft_edge")).select(col("c").as("graft_drop"))
   }
 
   /** Prebuilt corpus-side state for INCREMENTAL dedup: `buckets` =

@@ -1486,7 +1486,11 @@ s"""WITH c AS (SELECT vec_id AS cid, embedding AS ce FROM embeddings WHERE vec_i
     * rounds bounds the fixture's chain depth (X/H/P gives depth 2;
     * base-doc cross-containments can add a couple more), and BOTH
     * sides keep any cyclic remainder, so the round bound is the only
-    * divergence risk and the hash compare would catch it. */
+    * divergence risk and the hash compare would catch it. At sf0.001
+    * the edge set is 128 pairs, far under the broadcast threshold, so
+    * the engine side peels on the driver (3 Spark executions while the
+    * query is built); the distributed loop, same rounds and same cycle
+    * rule, takes over only for edge sets that do not fit. */
   val d58ContainmentMinimal: Q = Q(
     "d58_containment_minimal", {
       val rounds = 6

@@ -21,12 +21,40 @@ import graft.sources.FileLedger
   * starts are counted in-process with JFR's `jdk.ProcessStart`. */
 class LocalFsSpec extends SparkSpec {
 
+  /** Run the `rm -rf` of every artifact directory whose session is
+    * already garbage now, not inside a recorded window. Spark's
+    * `ArtifactManager` deletes a collected session's directory from its
+    * own JDK `Cleaner` thread, whenever a GC finds the session dead, and
+    * suites that ran earlier in this JVM leave such sessions behind.
+    * Collect, wait until a sentinel registered with the same cleaner
+    * has run, then until that thread waits on its queue again: the queue
+    * is empty, so every pending deletion has finished. */
+  private def settleArtifactCleanups(): Unit = {
+    val manager = Class.forName("org.apache.spark.sql.artifact.ArtifactManager$")
+    val cleaner = manager.getMethod("org$apache$spark$sql$artifact$ArtifactManager$$cleaner")
+      .invoke(manager.getField("MODULE$").get(null)).asInstanceOf[java.lang.ref.Cleaner]
+    val worker = new java.util.concurrent.CompletableFuture[Thread]
+    cleaner.register(new Object, () => { worker.complete(Thread.currentThread()); () })
+    System.gc()
+    val thread = worker.get(60, java.util.concurrent.TimeUnit.SECONDS)
+    def waitingOnQueue: Boolean = thread.getState != Thread.State.RUNNABLE &&
+      thread.getStackTrace.exists(f => f.getClassName == "java.lang.ref.ReferenceQueue" && f.getMethodName == "remove")
+    val deadline = System.nanoTime() + 60L * 1000 * 1000 * 1000
+    // twice, 20 ms apart: a reference enqueued just after the sentinel
+    // wakes the thread again
+    while (!(waitingOnQueue && { Thread.sleep(20); waitingOnQueue })) {
+      assert(System.nanoTime() < deadline, "the artifact cleaner did not go idle")
+      Thread.sleep(5)
+    }
+  }
+
   /** Run `body`, failing if it started any process (the JFR
     * `jdk.ProcessStart` events recorded while it ran). */
   private def forkFree[A](body: => A): A = {
     // Spark's first heartbeat runs `getconf PAGESIZE` once per JVM, in
     // this object's initializer: run it before recording, not within
     Class.forName("org.apache.spark.executor.ProcfsMetricsGetter$")
+    settleArtifactCleanups()
     val rec = new Recording()
     rec.enable("jdk.ProcessStart").withStackTrace()
     rec.start()

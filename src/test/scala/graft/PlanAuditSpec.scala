@@ -740,4 +740,70 @@ class PlanAuditSpec extends SparkSpec {
       assert(out.count() == 2) // X and P survive
     } finally spark.sparkContext.removeSparkListener(listener)
   }
+
+  /** SQL executions `body` starts, counted once the listener bus drains. */
+  private def sqlExecutions(body: => Unit): Int = {
+    val starts = new java.util.concurrent.atomic.AtomicInteger
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onOtherEvent(
+          e: org.apache.spark.scheduler.SparkListenerEvent): Unit = e match {
+        case _: org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart =>
+          starts.incrementAndGet(); ()
+        case _ => ()
+      }
+    }
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      body
+      org.apache.spark.GraftListenerBridge.waitUntilListenerBusEmpty(spark.sparkContext)
+      starts.get()
+    } finally spark.sparkContext.removeSparkListener(listener)
+  }
+
+  test("d58 peel loop at bound 0: the distributed regime still pays 2 init + 2 per round") {
+    // the catalogue's edge sets all fit the driver regime (3 executions:
+    // checkpoint, probe, collect), so the distributed loop is pinned
+    // through the peel core with the bound at 0. 1 ⊂ 2 ⊂ … ⊂ 6 peels in
+    // three rounds: at most 2 + 2 × 3 executions, and at least one per
+    // round beyond the init's two, which the driver regime never pays.
+    import org.apache.spark.sql.functions.col
+    import spark.implicits._
+    graft.Caches.releaseAll()
+    val docs = (1L to 6L).toDF("doc_id").localCheckpoint(true)
+    val pairs = (1L to 5L).map(i => (i, i + 1)).toDF("contained", "container")
+      .localCheckpoint(true)
+    var out: org.apache.spark.sql.DataFrame = null
+    val n = sqlExecutions {
+      out = graft.operators.Dedup.peelContainment(docs, col("doc_id"), pairs, 20, 0L)
+    }
+    assert(n >= 2 + 3 && n <= 2 + 2 * 3,
+      s"expected 5..8 SQL executions (2 init + 1..2 per round, 3 rounds), got $n")
+    assert(out.as[Long].collect().toSet == Set(2L, 4L, 6L))
+  }
+
+  test("d58 driver regime: the final anti-join broadcasts a local relation, with no shuffle on the drop side") {
+    import org.apache.spark.sql.catalyst.plans.LeftAnti
+    import org.apache.spark.sql.execution.LocalTableScanExec
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeLike
+    import org.apache.spark.sql.execution.joins.BroadcastHashJoinExec
+    import org.apache.spark.sql.functions.col
+    import spark.implicits._
+    graft.Caches.releaseAll()
+    val ts = (1 to 20).map(i => f"w$i%02d")
+    val corpus = Seq((1L, ts.mkString(" ")), (2L, (ts.take(14) :+ "zz").mkString(" ")),
+      (3L, (ts.slice(7, 14) :+ "zz").mkString(" "))).toDF("doc_id", "text")
+    val out = graft.operators.Dedup.dropContainedMinimal(
+      corpus, col("doc_id"), col("text"), threshold = 0.9)
+    assert(out.select("doc_id").as[Long].collect().toSet == Set(1L, 3L))
+    val p = out.queryExecution.executedPlan.toString
+    val antiJoins = unwrapPlan(out.queryExecution.executedPlan).collect {
+      case j: BroadcastHashJoinExec if j.joinType == LeftAnti => j
+    }
+    assert(antiJoins.size == 1, s"expected one broadcast anti-join:\n$p")
+    val dropSide = unwrapPlan(antiJoins.head.right)
+    assert(dropSide.exists(_.isInstanceOf[LocalTableScanExec]),
+      s"the drop side is not a local relation:\n$p")
+    assert(!dropSide.exists(_.isInstanceOf[ShuffleExchangeLike]),
+      s"a shuffle on the drop side:\n$p")
+  }
 }
